@@ -26,6 +26,11 @@ Tie semantics: right rows sort *before* left rows at equal timestamps
 (is_left ascending with right=0), so an exactly-simultaneous quote IS
 visible to the trade — kerf's ``<=`` convention.  Among right rows with
 identical timestamps the last by ``tiebreak`` wins deterministically.
+
+:func:`asof_join_merge` is the same operator's second entry point: a
+per-key cogrouped ``pandas.merge_asof`` on inputs already clustered on
+``by`` (co-bucketed storage), where it needs no exchange at all, and
+this plan on every other input.
 """
 
 from __future__ import annotations
@@ -78,6 +83,15 @@ def asof_join(
     out_names = {
         c: (c + suffix if c in left.columns else c) for c in right_cols
     }
+    # the union widens a by/on column to both sides' common type (an
+    # int key against a double one would come back double): the result
+    # casts such a column back to left's type
+    ltypes, rtypes = left.dtypes, dict(right.dtypes)
+    lcols = [
+        F.col(c).cast(t).alias(c) if c in (*by, on) and rtypes.get(c, t) != t
+        else F.col(c)
+        for c, t in ltypes
+    ]
 
     # the right payload travels as ONE nullable struct (timestamp +
     # carried columns), so the window fill picks a whole right ROW
@@ -92,7 +106,7 @@ def asof_join(
     )
     rhs = right.select(
         *[F.col(c) if c in by or c == on else F.lit(None).cast(t).alias(c)
-          for c, t in left.dtypes],
+          for c, t in ltypes],
         F.lit(0).alias(_L),
         F.struct(
             F.col(on).cast("long").alias("__on"),
@@ -112,7 +126,7 @@ def asof_join(
 
     if direction == "nearest":
         return _asof_nearest(
-            unioned, left, on, by, right_cols, out_names, tolerance_ns
+            unioned, left, on, by, right_cols, out_names, tolerance_ns, lcols
         )
     if direction not in ("backward", "forward"):
         raise ArgsError(
@@ -153,7 +167,7 @@ def asof_join(
     else:
         keep = F.col(_RV).isNotNull()
     return out.select(
-        *[F.col(c) for c in left.columns],
+        *lcols,
         *[
             F.when(keep, F.col(_RV)[out_names[c]])
             .otherwise(F.lit(None))
@@ -175,6 +189,7 @@ def _asof_nearest(
     right_cols: Sequence[str],
     out_names: dict,
     tolerance_ns: int | None,
+    lcols: list,
 ) -> DataFrame:
     """``direction="nearest"``: the right row with the smallest
     |right.on - left.on|; ties (equidistant before/after, or an exact
@@ -215,7 +230,7 @@ def _asof_nearest(
     )
     chosen = F.when(use_b, F.col(_RVB)).otherwise(F.col(_RVF))
     return filled.select(
-        *[F.col(c) for c in left.columns],
+        *lcols,
         *[
             F.when(keep, chosen[out_names[c]])
             .otherwise(F.lit(None))
@@ -223,6 +238,11 @@ def _asof_nearest(
             for c in right_cols
         ],
     )
+
+
+# bound at import, so a wrapper installed on the public ``asof_join``
+# name sees one call per asof_join_merge, not two
+_asof_window = asof_join
 
 
 def asof_join_merge(
@@ -234,40 +254,28 @@ def asof_join_merge(
     tolerance_ns: int | None = None,
     suffix: str = "_r",
     direction: str = "backward",
-    batch_keys: bool = True,
 ) -> DataFrame:
-    """Same semantics as :func:`asof_join` (all three directions),
-    alternate physical strategy: co-grouped ``applyInPandas`` running
-    ``pandas.merge_asof`` per key group — whose tie conventions
-    (backward last / forward first / nearest prefers backward) match
-    the window variant's by construction.
+    """Same semantics as :func:`asof_join` (all three directions).  Runs
+    as a per-key cogrouped ``pandas.merge_asof`` where that is the
+    zero-exchange plan, and as the window plan everywhere else.
 
-    When to prefer which (both cost one shuffle of each side on ``by``):
-
-    * ``asof_join`` (window forward-fill) stays fully JVM-side — best
-      when right carries few columns and groups can be huge (the sort
-      spills; no group must fit in memory).
-    * ``asof_join_merge`` does a linear two-pointer merge per group in
-      Arrow batches — best when right is *wide* (forward-fill pays one
-      ``last() over window`` per carried column; the merge pays O(1))
-      and per-key data fits an executor's Arrow batch comfortably.
-
-    Physical shape (optimization r14): both sides cogroup on a
-    DETERMINISTIC hash bucket of the ``by`` keys (xxhash64 —
-    retry-safe, SPARK-38388) rather than on the keys themselves, and
-    ONE vectorized ``pandas.merge_asof(..., by=...)`` call per bucket
-    handles every key in it.  Per-key cogrouping dispatched Python
-    once per group (guide §4.1 — measured ~10k Arrow round trips +
-    per-group pandas overhead dominating the operator at ~10k tiny
-    groups); bucket count derives from the session's shuffle
-    partitioning, so a cluster sized for the data gets proportionally
-    more buckets and each task materializes a bounded slice.  Float /
-    double ``by`` keys keep the per-key cogroup (exact NULL-vs-NaN
-    group identity cannot survive the pandas conversion) — as does
-    ``batch_keys=False``: pass it when both inputs are CO-BUCKETED on
-    ``by`` (``Workspace.save_bucketed``), where the per-key cogroup
-    inherits the bucketed scans' distribution and the whole as-of runs
-    with ZERO exchanges (a derived batch key would reintroduce two).
+    The choice is read off the inputs.  The cogroup needs equal
+    ``by``/``on`` types on both sides: co-bucketed int and bigint keys
+    hash to different buckets yet plan no exchange, and pandas refuses
+    mismatched merge keys (the window widens both sides).  Then its
+    physical plan is inspected: with no ``Exchange`` in it the inputs are
+    already clustered on ``by`` (e.g. both saved with
+    ``Workspace.save_bucketed`` on ``by``, one bucket count) and the
+    as-of streams matching bucket files pairwise; the window plan would
+    add one hash exchange there, since on Spark 4.1 a union whose
+    children carry computed projections loses the bucketed
+    partitioning.  On any other input the cogroup shuffles both sides
+    and the window is cheaper: with a 19-column right side
+    (``perfbench`` ``asof_wide``, 4 cores, 3 warm runs) the window took
+    0.22-0.26 s and the cogroup 0.76-0.79 s — the window fills one
+    struct per row, not one column at a time.  Tie conventions match
+    the window's by construction, and Spark, not pandas, decides key
+    identity (NULL and NaN keys included).
 
     Requires at least one ``by`` key (the window variant also supports
     global as-of).
@@ -284,12 +292,12 @@ def asof_join_merge(
     if right_cols is None:
         right_cols = [c for c in right.columns if c not in by and c != on]
     out_names = {c: (c + suffix if c in left.columns else c) for c in right_cols}
-    rtypes = dict(right.dtypes)
+    ltypes, rtypes = dict(left.dtypes), dict(right.dtypes)
     out_schema = ", ".join(
-        [f"`{f.name}` {f.dataType.simpleString()}" for f in left.schema.fields]
+        [f"`{c}` {t}" for c, t in ltypes.items()]
         + [f"`{out_names[c]}` {rtypes[c]}" for c in right_cols]
     )
-    lcols = list(left.columns)
+    out_cols = [*ltypes, *[out_names[c] for c in right_cols]]
     # pandas nullable dtypes keep int/bool columns intact when unmatched
     # left rows introduce missing values (plain int64 would float-ify)
     _NULLABLE = {
@@ -301,173 +309,39 @@ def asof_join_merge(
     # lineage (e.g. both filtered from one frame), duplicate attribute
     # ids make Catalyst mis-prune the right child's columns
     rpre = right.toDF(*[f"__r_{c}" for c in right.columns])
-    r_on, r_keys = f"__r_{on}", [f"__r_{c}" for c in by]
-    r_carry = [f"__r_{c}" for c in right_cols]
-    ltypes = dict(left.dtypes)
-    coarse = batch_keys and not any(
-        ltypes.get(c) in ("float", "double") for c in by
-    )
+    r_on, r_carry = f"__r_{on}", [f"__r_{c}" for c in right_cols]
+    r_renames = {r_on: on, **{f"__r_{c}": out_names[c] for c in right_cols}}
 
-    def fix_types(df: pd.DataFrame) -> pd.DataFrame:
-        for c in right_cols:
-            want = _NULLABLE.get(rtypes[c])
-            if want:
-                df[out_names[c]] = df[out_names[c]].astype(want)
-        return df
-
-    out_cols = lcols + [out_names[c] for c in right_cols]
-    r_renames = {
-        r_on: on,
-        **{f"__r_{c}": out_names[c] for c in right_cols},
-    }
-
-    def null_fill(lpdf: pd.DataFrame) -> pd.DataFrame:
-        merged = lpdf.copy()
-        for c in right_cols:
-            merged[out_names[c]] = None
-        return fix_types(merged)[out_cols]
-
-    def merge_one(lpdf: pd.DataFrame, rpdf: pd.DataFrame) -> pd.DataFrame:
-        """One key group (or the whole non-null slice of a bucket with
-        ``with_by``): the original per-group merge_asof."""
-        if len(rpdf) == 0:
-            return null_fill(lpdf)
-        lpdf = lpdf.sort_values(on, kind="mergesort")
+    def merge_key(lpdf: pd.DataFrame, rpdf: pd.DataFrame) -> pd.DataFrame:
         rsel = rpdf[[r_on, *r_carry]].sort_values(
             [r_on, *r_carry], kind="mergesort"
         )
         merged = pd.merge_asof(
-            lpdf,
+            lpdf.sort_values(on, kind="mergesort"),
             rsel.rename(columns=r_renames),
             on=on,
             direction=direction,
             allow_exact_matches=True,
             tolerance=tolerance_ns,
         )
-        return fix_types(merged)[out_cols]
+        for c in right_cols:
+            want = _NULLABLE.get(rtypes[c])
+            if want:
+                merged[out_names[c]] = merged[out_names[c]].astype(want)
+        return merged[out_cols]
 
-    def merge_bucket(lpdf: pd.DataFrame, rpdf: pd.DataFrame) -> pd.DataFrame:
-        """One hash bucket: vectorized merge_asof over every key in it.
-        Rows whose key carries a NULL component take a per-key-tuple
-        side path (Spark groups NULL = NULL; pandas ``by`` matching
-        would drop them) — exact for the non-float key types this path
-        admits, because NA in the converted frame can only mean NULL."""
-        if len(lpdf) == 0:
-            return pd.DataFrame(columns=out_cols)
-        lnull = lpdf[by].isna().any(axis=1)
-        rnull = (
-            rpdf[r_keys].isna().any(axis=1)
-            if len(rpdf)
-            else pd.Series([], dtype=bool)
-        )
-        parts = []
-        lmain = lpdf[~lnull] if lnull.any() else lpdf
-        rmain = rpdf[~rnull] if len(rpdf) and rnull.any() else rpdf
-        if len(lmain):
-            if len(rmain) == 0:
-                parts.append(null_fill(lmain))
-            else:
-                lmain = lmain.sort_values(on, kind="mergesort")
-                rsel = rmain[[*r_keys, r_on, *r_carry]].sort_values(
-                    [r_on, *r_carry], kind="mergesort"
-                ).rename(
-                    columns={
-                        **r_renames,
-                        **{f"__r_{c}": c for c in by},
-                    }
-                )
-                # a by column whose bucket slice held NULLs arrives as
-                # float64/object while its twin stays int64/bool —
-                # merge_asof refuses mismatched by dtypes, and object
-                # is the lossless common ground (values are exact: the
-                # NULL rows were routed off above)
-                for c in by:
-                    if lmain[c].dtype != rsel[c].dtype:
-                        lmain = lmain.astype({c: object})
-                        rsel = rsel.astype({c: object})
-                merged = pd.merge_asof(
-                    lmain,
-                    rsel,
-                    on=on,
-                    by=by,
-                    direction=direction,
-                    allow_exact_matches=True,
-                    tolerance=tolerance_ns,
-                )
-                parts.append(fix_types(merged)[out_cols])
-        if lnull.any():
-            lrest = lpdf[lnull]
-            rrest = rpdf[rnull] if len(rpdf) and rnull.any() else rpdf.iloc[0:0]
-
-            def key_of(frame, cols):
-                # a Series grouper, NOT a bare list (pandas would read
-                # a list of tuples as a list of column names)
-                return pd.Series(
-                    [
-                        tuple(None if pd.isna(v) else v for v in t)
-                        for t in frame[list(cols)].itertuples(index=False)
-                    ],
-                    index=frame.index,
-                    dtype=object,
-                )
-
-            rgroups: dict = {}
-            if len(rrest):
-                for k, grp in rrest.groupby(
-                    key_of(rrest, r_keys), sort=False
-                ):
-                    rgroups[k] = grp
-            for k, lgrp in lrest.groupby(key_of(lrest, by), sort=False):
-                parts.append(
-                    merge_one(lgrp, rgroups.get(k, rpdf.iloc[0:0]))
-                )
-        if not parts:
-            return pd.DataFrame(columns=out_cols)
-        if len(parts) == 1:
-            return parts[0]
-        return pd.concat(parts, ignore_index=True)
-
-    if not coarse:
-        # per-key cogroup (the pre-r14 shape): each dispatch is exactly
-        # one Spark-identified key group, so NULL-vs-NaN float key
-        # identity is decided by Spark, never by pandas
-        def merge_keyed(lpdf: pd.DataFrame, rpdf: pd.DataFrame):
-            if len(lpdf) == 0:
-                # key exists only on the right: no left rows to emit
-                return pd.DataFrame(columns=out_cols)
-            return merge_one(lpdf, rpdf)
-
-        return (
+    if all(ltypes.get(c) == rtypes.get(c) for c in (*by, on)):
+        cogrouped = (
             left.groupBy(*by)
-            .cogroup(rpre.groupBy(*r_keys))
-            .applyInPandas(
-                lambda ldf, rdf: merge_keyed(ldf, rdf), schema=out_schema
-            )
+            .cogroup(rpre.groupBy(*[f"__r_{c}" for c in by]))
+            .applyInPandas(merge_key, schema=out_schema)
         )
-
-    spark = left.sparkSession
-    try:
-        sp = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    except Exception:
-        sp = 200
-    import os as _os
-
-    nb = int(
-        _os.environ.get("KERF_ASOF_MERGE_BUCKETS", 0)
-    ) or max(1, sp) * 4
-    _B = "__kf_bucket"
-    lb = left.withColumn(
-        _B, F.pmod(F.xxhash64(*[F.col(c) for c in by]), F.lit(nb))
-    )
-    rb = rpre.withColumn(
-        _B, F.pmod(F.xxhash64(*[F.col(c) for c in r_keys]), F.lit(nb))
-    )
-    return (
-        lb.groupBy(_B)
-        .cogroup(rb.groupBy(_B))
-        .applyInPandas(
-            lambda ldf, rdf: merge_bucket(ldf, rdf), schema=out_schema
-        )
+        plan = cogrouped._jdf.queryExecution().executedPlan().toString()
+        if "Exchange" not in plan:
+            return cogrouped
+    return _asof_window(
+        left, right, on, by, right_cols, tolerance_ns,
+        suffix=suffix, direction=direction,
     )
 
 

@@ -49,6 +49,8 @@ from contextlib import redirect_stdout
 
 from pyspark.sql import DataFrame
 
+from .kerfsql import _split_top
+
 #: A Window node in the OPTIMIZED LOGICAL plan prints only its
 #: NON-EMPTY argument groups: `Window [exprs], [partitionSpec],
 #: [orderSpec]` when both are present, `Window [exprs], [spec]` when
@@ -70,6 +72,32 @@ def _explain(df: DataFrame, mode: str) -> str:
     return buf.getvalue()
 
 
+def _generator_inputs(phys: str) -> list[str]:
+    """Each Generate's input expression as a pushed-down filter prints
+    it: the projection aliases it reads (``expr AS name#id``) are
+    substituted back in, the way pushdown inlines them."""
+    defs = {}
+    for m in re.finditer(r"(?m)^Output \[\d+\]: \[(.*)\]$", phys):
+        for item in _split_top(m.group(1)):
+            expr, sep, name = item.rpartition(" AS ")
+            if sep and re.fullmatch(r"\w+#\d+L?", name):
+                defs[name] = expr
+    token = re.compile(r"\b\w+#\d+L?\b")
+    gens = []
+    for m in re.finditer(
+        r"(?m)^\(\d+\) Generate\b.*\n(?:.+\n)*?Arguments: (.*)$", phys
+    ):
+        call = _split_top(m.group(1))[0]  # explode(<input>)
+        g = call[call.index("(") + 1:-1]
+        for _ in range(len(defs)):
+            inlined = token.sub(lambda t: defs.get(t.group(0), t.group(0)), g)
+            if inlined == g:
+                break
+            g = inlined
+        gens.append(g)
+    return gens
+
+
 def lint_plan(df: DataFrame) -> list[str]:
     """Return the sorted list of anti-pattern tags present in ``df``'s
     plan (empty list = clean)."""
@@ -82,22 +110,25 @@ def lint_plan(df: DataFrame) -> list[str]:
         tags.add("nested-loop-join")
     if "BatchEvalPython" in phys:
         tags.add("python-row-udf")
-    # the InferFiltersFromGenerate double-eval (r13 leg 6): only when a
-    # Generate is present AND some Filter condition re-evaluates a
-    # lambdafunction body that re-indexes with element_at — the exact
-    # duplicated-interpreted-generator signature (the cheap arrays_zip
-    # rebuild still infers a lambdafunction filter, but without the
-    # per-element element_at re-indexing)
-    if "Generate" in phys:
-        for line in phys.splitlines():
-            ls = line.lstrip()
-            if (
-                ls.startswith("Condition")
-                and "lambdafunction(" in ls
-                and "element_at(" in ls
-            ):
-                tags.add("generator-filter-dup")
-                break
+    # the InferFiltersFromGenerate double-eval: a Filter condition
+    # carries the inferred ``size(<generator input>) > 0`` wrapper, and
+    # that input is a lambdafunction body re-indexing with element_at —
+    # the duplicated-interpreted-generator signature (the cheap
+    # arrays_zip rebuild still infers a lambdafunction filter, but
+    # without the per-element element_at re-indexing; a user's own
+    # element_at-lambda predicate wraps something else)
+    conds = [
+        ls for ls in (line.lstrip() for line in phys.splitlines())
+        if ls.startswith("Condition")
+    ]
+    for g in _generator_inputs(phys) if conds else ():
+        if (
+            "lambdafunction(" in g
+            and "element_at(" in g
+            and any(f"size({g}, false) > 0" in c for c in conds)
+        ):
+            tags.add("generator-filter-dup")
+            break
     # inspect only the optimized-logical section of the extended output
     opt = logical.split("== Optimized Logical Plan ==")[-1]
     opt = opt.split("== Physical Plan ==")[0]

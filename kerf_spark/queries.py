@@ -4472,10 +4472,10 @@ def q19(spark, sf):
     """,
 )
 def asof_merge_latest_order(spark, sf):
-    """Same as-of semantics through the alternate physical strategy:
-    cogrouped applyInPandas merge (pandas.merge_asof per key group) —
-    the wide-right-side scale path.  Same oracle as the window variant;
-    the driver proves the two strategies agree."""
+    """The same as-of through ``asof_join_merge``: on these unbucketed
+    inputs the cogroup would shuffle both sides, so it takes the window
+    plan (``asof_bucketed_colocated`` is the shape that keeps the
+    cogroup).  Same oracle as the window variant."""
     e = _t(spark, sf, "events").select("event_id", "user_id", "ts")
     o = _t(spark, sf, "orders").select(
         F.col("o_custkey").alias("user_id"),
@@ -9084,10 +9084,6 @@ def asof_bucketed_colocated(spark, sf):
     out = asof_join_merge(
         ws.load("ev_bkt"), ws.load("ord_bkt"),
         on="ts", by="user_id", right_cols=["orderkey", "totalprice"],
-        # co-bucketed inputs: the per-key cogroup inherits the bucketed
-        # distribution (zero exchanges); a derived batch key would
-        # reintroduce two (r14 batch_keys note)
-        batch_keys=False,
     )
     return out.where(F.col("orderkey").isNotNull()).select(
         "event_id", "user_id", "orderkey",

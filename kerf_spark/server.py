@@ -2431,6 +2431,7 @@ def _folio_parse_select(q: str):
     if table is None:
         raise ArgsError("folio_select requires a from clause")
     body, by = _split_clause(body, "by")  # kerf `select ... by k from t`
+    n_kerf = len(_split_top(by)) if by else 0
     if ansi_by:
         by = ansi_by if not by else f"{by}, {ansi_by}"
     # group keys as (alias, expr) pairs: a plain column keys by its
@@ -2640,6 +2641,14 @@ def _folio_parse_select(q: str):
                     f"needs a projection alias (`... as name`)"
                 )
             items.append((alias or expr, None, hit, None))
+    # kerf `by` keys are output columns, first, as in kerf_sql; ANSI
+    # `group by` keys appear only where the select list names them
+    projected = {it[2] for it in items if it[1] is None}
+    items[:0] = [
+        (ka if ka == ke else ke, None, ka, None)
+        for ka, ke in keys[:n_kerf]
+        if ka not in projected
+    ]
     return items, keys, table.strip(), where, having, order, limit
 
 

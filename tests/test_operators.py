@@ -466,91 +466,79 @@ def test_asof_fixture_scale(spark, tables):
 
 
 # ----------------------------------------------------- asof merge variant
-def test_asof_merge_equals_window_variant(spark, tables):
-    """Both physical strategies must agree row-for-row on fixture data."""
+def _cobucketed(spark, root, by, **frames):
+    """Save each frame hash-bucketed on ``by`` (2 buckets) and load it
+    back: the one input shape on which ``asof_join_merge`` runs its
+    cogroup instead of routing to the window plan."""
+    from kerf_spark.sources.catalog import Workspace
+
+    ws = Workspace(spark, str(root))
+    for name, df in frames.items():
+        ws.save_bucketed(name, df, [by], num_buckets=2)
+    return [ws.load(name) for name in frames]
+
+
+def _exchanges(df):
+    return df._jdf.queryExecution().executedPlan().toString().count("Exchange")
+
+
+def test_asof_merge_equals_window_variant(spark, tables, tmp_path):
+    """The cogroup (co-bucketed inputs) must agree row-for-row with the
+    window plan on fixture data."""
     from pyspark.sql import functions as F
 
     from kerf_spark.operators.asof import asof_join, asof_join_merge
 
     ev = tables["events"].select("user_id", "event_id", "ts", "value")
-    left = ev.where(F.col("event_id") % 3 == 0)
-    right = ev.where(F.col("event_id") % 3 != 0).select(
-        "user_id", "ts", F.col("value").alias("rv")
+    left, right = _cobucketed(
+        spark, tmp_path, "user_id",
+        ev_left=ev.where(F.col("event_id") % 3 == 0),
+        ev_right=ev.where(F.col("event_id") % 3 != 0).select(
+            "user_id", "ts", F.col("value").alias("rv")
+        ),
     )
     a = asof_join(
         left, right, on="ts", by="user_id", right_cols=["rv"]
     ).select("event_id", "ts", "rv")
-    b = asof_join_merge(
+    merged = asof_join_merge(
         left, right, on="ts", by="user_id", right_cols=["rv"]
-    ).select("event_id", "ts", "rv")
+    )
+    assert _exchanges(merged) == 0  # the cogroup ran, not the window
+    b = merged.select("event_id", "ts", "rv")
     assert a.subtract(b).count() == 0 and b.subtract(a).count() == 0
     assert a.count() == left.count()
 
 
-def test_asof_merge_bucket_path_nulls_and_mixed_dtypes(spark):
-    """The r14 coarse-bucket merge path must keep Spark's group
-    identity for NULL keys (NULL = NULL matches; pandas ``by``
-    matching alone would drop them) and survive the dtype skew a
-    null-carrying key column picks up in the Arrow->pandas conversion
-    (int64 one side, float64 the other).  Window variant is the
-    semantic oracle; a 1-bucket override forces every key group —
-    null and not — through ONE pandas dispatch."""
-    import os
-
-    from pyspark.sql import functions as F
-
+@pytest.mark.parametrize(
+    "ltype, rtype, right_cols",
+    [
+        ("int", "bigint", ["px"]),  # int left key against bigint right
+        ("bigint", "bigint", ["px", "k"]),  # by key also carried
+        ("int", "double", ["px"]),  # float key on the right side only
+    ],
+)
+def test_asof_merge_mixed_key_types_match(
+    spark, tmp_path, ltype, rtype, right_cols
+):
+    """Key types that differ between the sides, or a ``by`` key listed
+    in ``right_cols``, still match equal key values, on plain and on
+    co-bucketed inputs (where int and bigint keys sit in different
+    buckets); the result keeps the left key's type."""
     from kerf_spark.operators.asof import asof_join, asof_join_merge
 
-    left = spark.createDataFrame(
-        [(1, 100, 10), (1, 300, 11), (2, 150, 12), (None, 120, 13),
-         (None, 500, 14), (3, 50, 15)],
-        "k long, ts long, lid long",
+    left = spark.range(1, 40).selectExpr(
+        f"cast(id as {ltype}) as k", "100L as ts", "id as lid"
     )
-    right = spark.createDataFrame(
-        [(1, 90, 1.0), (1, 250, 2.0), (2, 150, 3.0), (None, 100, 4.0),
-         (None, 400, 5.0), (4, 10, 6.0)],
-        "k long, ts long, px double",
+    right = spark.range(1, 40).selectExpr(
+        f"cast(id as {rtype}) as k", "90L as ts", "5.0d as px"
     )
-
-    def res(df):
-        return {
-            (r["lid"]): r["px"]
-            for r in df.select("lid", "px").collect()
-        }
-
-    for nb in (None, "1"):
-        prior = os.environ.get("KERF_ASOF_MERGE_BUCKETS")
-        if nb is not None:
-            os.environ["KERF_ASOF_MERGE_BUCKETS"] = nb
-        try:
-            got = res(
-                asof_join_merge(
-                    left, right, on="ts", by="k", right_cols=["px"]
-                )
-            )
-        finally:
-            if nb is not None:
-                if prior is None:
-                    os.environ.pop("KERF_ASOF_MERGE_BUCKETS", None)
-                else:
-                    os.environ["KERF_ASOF_MERGE_BUCKETS"] = prior
-        want = res(
-            asof_join(left, right, on="ts", by="k", right_cols=["px"])
-        )
-        assert got == want, (nb, got, want)
-        # the NULL-key rows really did match the NULL-key right rows
-        assert got[13] == 4.0 and got[14] == 5.0
-
-    # float by-keys keep the per-key cogroup (exact NULL-vs-NaN group
-    # identity): plan shows the multi-column grouping, not the bucket
-    fl = left.withColumn("k", F.col("k").cast("double"))
-    fr = right.withColumn("k", F.col("k").cast("double"))
-    out = asof_join_merge(fl, fr, on="ts", by="k", right_cols=["px"])
-    plan = out._jdf.queryExecution().analyzed().toString()
-    assert "__kf_bucket" not in plan
-    assert res(out) == res(
-        asof_join(fl, fr, on="ts", by="k", right_cols=["px"])
-    )
+    cobucketed = _cobucketed(spark, tmp_path, "k", l=left, r=right)
+    for lf, rf in ((left, right), cobucketed):
+        got = asof_join_merge(lf, rf, on="ts", by="k", right_cols=right_cols)
+        want = asof_join(lf, rf, on="ts", by="k", right_cols=right_cols)
+        assert {r["px"] for r in got.collect()} == {5.0}
+        assert sorted(got.collect()) == sorted(want.collect())
+        assert dict(got.dtypes)["k"] == dict(want.dtypes)["k"] == ltype
 
 
 def test_asof_property_vs_pandas_oracle(spark):
@@ -1896,38 +1884,64 @@ def test_bronze_log_scd2_fold_is_order_insensitive(spark):
         assert fold(order) == full, order
 
 
-def test_asof_strategies_agree_all_directions(spark):
-    """Window forward-fill and cogrouped merge_asof must agree row for
-    row in every direction, with and without tolerance."""
+def test_asof_strategies_agree_all_directions(spark, tmp_path):
+    """Window forward-fill and the cogrouped merge_asof (co-bucketed
+    inputs) must agree row for row in every direction, with and
+    without tolerance — also on NULL keys (NULL = NULL matches, as in
+    Spark grouping) and on double keys."""
+    from pyspark.sql import functions as F
+
     from kerf_spark.operators.asof import asof_join, asof_join_merge
 
     t = spark.createDataFrame(
         [("A", 100, 1), ("A", 205, 2), ("B", 150, 3), ("A", 50, 4),
          ("A", 300, 5), ("C", 7, 6)],
-        "sym string, ts long, tid long",
+        "k string, ts long, lid long",
     )
     q = spark.createDataFrame(
         [("A", 90, 1.0), ("A", 100, 2.0), ("A", 200, 3.0),
          ("A", 290, 4.0), ("B", 160, 9.0)],
-        "sym string, ts long, bid double",
+        "k string, ts long, px double",
     )
-    for direction in ("backward", "forward", "nearest"):
-        for tol in (None, 15):
-            a = {
-                (r["sym"], r["ts"]): r["bid"]
-                for r in asof_join(
-                    t, q, on="ts", by="sym",
+    nl = spark.createDataFrame(
+        [(1, 100, 10), (1, 300, 11), (2, 150, 12), (None, 120, 13),
+         (None, 500, 14), (3, 50, 15)],
+        "k long, ts long, lid long",
+    )
+    nr = spark.createDataFrame(
+        [(1, 90, 1.0), (1, 250, 2.0), (2, 150, 3.0), (None, 100, 4.0),
+         (None, 400, 5.0), (4, 10, 6.0)],
+        "k long, ts long, px double",
+    )
+    dbl = F.col("k").cast("double")
+    inputs = {
+        "sym": (t, q),
+        "null_keys": (nl, nr),
+        "double_keys": (nl.withColumn("k", dbl), nr.withColumn("k", dbl)),
+    }
+    for name, (lf, rf) in inputs.items():
+        lf, rf = _cobucketed(
+            spark, tmp_path / name, "k", **{f"{name}_l": lf, f"{name}_r": rf}
+        )
+        for direction in ("backward", "forward", "nearest"):
+            for tol in (None, 15):
+                a = {
+                    r["lid"]: r["px"]
+                    for r in asof_join(
+                        lf, rf, on="ts", by="k",
+                        direction=direction, tolerance_ns=tol,
+                    ).collect()
+                }
+                merged = asof_join_merge(
+                    lf, rf, on="ts", by="k",
                     direction=direction, tolerance_ns=tol,
-                ).collect()
-            }
-            b = {
-                (r["sym"], r["ts"]): r["bid"]
-                for r in asof_join_merge(
-                    t, q, on="ts", by="sym",
-                    direction=direction, tolerance_ns=tol,
-                ).collect()
-            }
-            assert a == b, (direction, tol)
+                )
+                assert _exchanges(merged) == 0, name
+                b = {r["lid"]: r["px"] for r in merged.collect()}
+                assert a == b, (name, direction, tol)
+                if name == "null_keys" and (direction, tol) == ("backward", None):
+                    # the NULL-key rows really matched the NULL-key quotes
+                    assert b[13] == 4.0 and b[14] == 5.0
 
 
 def test_merge_intervals_islands_and_touching(spark):

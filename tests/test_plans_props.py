@@ -65,7 +65,9 @@ def test_positional_family_cuts_before_numbering(spark):
 
 
 def test_asof_join_shuffles_exactly_once(spark):
-    from kerf_spark.operators.asof import asof_join
+    """Also asof_join_merge on inputs not clustered on the by-key: the
+    cogroup would shuffle both sides, so it takes the window plan."""
+    from kerf_spark.operators.asof import asof_join, asof_join_merge
 
     t = spark.createDataFrame(
         [("a", 10, 1.0), ("a", 20, 2.0)], "sym string, ts_ns long, price double"
@@ -73,9 +75,12 @@ def test_asof_join_shuffles_exactly_once(spark):
     q = spark.createDataFrame(
         [("a", 5, 0.9), ("a", 15, 1.9)], "sym string, ts_ns long, bid double"
     )
-    plan = plan_of(asof_join(t, q, on="ts_ns", by="sym"), "simple")
-    # one hash-partitioning exchange for the window; unions are shuffle-free
-    assert plan.count("Exchange hashpartitioning") == 1
+    for fn in (asof_join, asof_join_merge):
+        plan = plan_of(fn(t, q, on="ts_ns", by="sym"), "simple")
+        # one hash-partitioning exchange for the window; unions are
+        # shuffle-free
+        assert plan.count("Exchange hashpartitioning") == 1, fn.__name__
+        assert "FlatMapCoGroupsInPandas" not in plan, fn.__name__
 
 
 def test_bucketed_asof_runs_with_zero_exchanges(spark):
@@ -929,6 +934,11 @@ def test_lint_plan_detects_each_antipattern(spark):
         "size(filter(__w, x -> element_at(__w, 1) = x)) > 0"
     )
     assert "generator-filter-dup" not in lint_plan(nogen)
+    # ... and so does that element_at-lambda filter beside an unrelated
+    # explode: its size(...) > 0 wraps the user's predicate, not the
+    # generator's input
+    unrelated = nogen.selectExpr("id", "explode(__w) as g")
+    assert "generator-filter-dup" not in lint_plan(unrelated)
 
 
 @settings(max_examples=6, deadline=None)

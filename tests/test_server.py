@@ -598,6 +598,49 @@ def test_folio_select_splits_algebraic_aggregates(spark):
             s.stop()
 
 
+def test_folio_select_kerf_by_form_returns_keys(spark, monkeypatch):
+    """The kerf ``by`` form returns its keys first, as ``kerf_sql`` does
+    for the same text, from both the driver-side and the Spark final;
+    a key the select list already names is not repeated."""
+    from pyspark.sql import functions as F
+
+    from kerf_spark import server as SRV
+    from kerf_spark.plans.kerfsql import kerf_sql
+    from kerf_spark.server import folio_select
+    from kerf_spark.sources.io import read_table
+
+    cust = read_table(spark, SF, "customer")
+    shards = [cust.where(F.col("c_custkey") % 2 == i) for i in range(2)]
+    srvs = [
+        KerfServer(spark, tables={"kb_customer": sh}).start() for sh in shards
+    ]
+    stmt = (
+        "select n: count(*), bal: sum(c_acctbal) by c_nationkey"
+        " from kb_customer"
+    )
+    cust.createOrReplaceTempView("kb_customer")
+    want = kerf_sql(spark, stmt)
+    assert want.columns == ["c_nationkey", "n", "bal"]
+    want = {r["c_nationkey"]: r["n"] for r in want.collect()}
+    try:
+        addrs = [s.address for s in srvs]
+        for spark_final in (False, True):
+            with monkeypatch.context() as m:
+                if spark_final:
+                    m.setattr(SRV, "_fast_types_ok", lambda *a, **k: False)
+                got = folio_select(spark, addrs, stmt)
+                assert got.columns == ["c_nationkey", "n", "bal"], spark_final
+                assert {r[0]: r[1] for r in got.collect()} == want
+        named = folio_select(
+            spark, addrs,
+            "select n: count(*), c_nationkey by c_nationkey from kb_customer",
+        )
+        assert named.columns == ["n", "c_nationkey"]
+    finally:
+        for s in srvs:
+            s.stop()
+
+
 def test_folio_driver_final_matches_spark_final_bitwise(
     spark, monkeypatch
 ):

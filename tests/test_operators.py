@@ -509,6 +509,50 @@ def test_asof_merge_equals_window_variant(spark, tables, tmp_path):
     assert a.count() == left.count()
 
 
+def test_asof_merge_bucket_path_nulls_and_mixed_dtypes(spark, tmp_path):
+    """``asof_join_merge`` keeps Spark's group identity for NULL keys
+    (NULL = NULL matches; pandas ``by`` matching alone would drop them)
+    and survives the dtype skew a null-carrying key column picks up in
+    the Arrow->pandas conversion (int64 in one group, float64 in
+    another), on long and on double keys. Plain inputs take the window
+    plan, co-bucketed inputs the per-key cogroup; the window variant is
+    the semantic oracle for both."""
+    from pyspark.sql import functions as F
+
+    from kerf_spark.operators.asof import asof_join, asof_join_merge
+
+    left = spark.createDataFrame(
+        [(1, 100, 10), (1, 300, 11), (2, 150, 12), (None, 120, 13),
+         (None, 500, 14), (3, 50, 15)],
+        "k long, ts long, lid long",
+    )
+    right = spark.createDataFrame(
+        [(1, 90, 1.0), (1, 250, 2.0), (2, 150, 3.0), (None, 100, 4.0),
+         (None, 400, 5.0), (4, 10, 6.0)],
+        "k long, ts long, px double",
+    )
+
+    def res(df):
+        return {r["lid"]: r["px"] for r in df.select("lid", "px").collect()}
+
+    dbl = F.col("k").cast("double")
+    for name, (lf, rf) in {
+        "long_keys": (left, right),
+        "double_keys": (left.withColumn("k", dbl), right.withColumn("k", dbl)),
+    }.items():
+        cobucketed = _cobucketed(
+            spark, tmp_path / name, "k", **{f"{name}_l": lf, f"{name}_r": rf}
+        )
+        for plain, (a, b) in ((True, (lf, rf)), (False, cobucketed)):
+            got = asof_join_merge(a, b, on="ts", by="k", right_cols=["px"])
+            if not plain:
+                assert _exchanges(got) == 0, name  # the cogroup ran
+            want = asof_join(a, b, on="ts", by="k", right_cols=["px"])
+            assert res(got) == res(want), (name, plain)
+            # the NULL-key rows really did match the NULL-key right rows
+            assert res(got)[13] == 4.0 and res(got)[14] == 5.0, (name, plain)
+
+
 @pytest.mark.parametrize(
     "ltype, rtype, right_cols",
     [

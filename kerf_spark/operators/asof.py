@@ -20,17 +20,18 @@ key and ONE within-partition sort — the same cost profile as a
 sort-merge join, with no row explosion (contrast the naive
 ``left.join(right, r.ts <= l.ts)`` + max, which is quadratic per key).
 Skewed keys are handled by AQE skew-split since the heavy op is a
-window, and the plan stays fully JVM-side (no Python).
+window, and the plan stays fully JVM-side (no Python).  Inputs already
+clustered on ``by`` (both saved with ``Workspace.save_bucketed`` on
+``by``, one bucket count, equal non-floating key types) keep that
+clustering through the union, and step 2 disappears: no exchange at
+all.
 
 Tie semantics: right rows sort *before* left rows at equal timestamps
 (is_left ascending with right=0), so an exactly-simultaneous quote IS
 visible to the trade — kerf's ``<=`` convention.  Among right rows with
 identical timestamps the last by ``tiebreak`` wins deterministically.
 
-:func:`asof_join_merge` is the same operator's second entry point: a
-per-key cogrouped ``pandas.merge_asof`` on inputs already clustered on
-``by`` (co-bucketed storage), where it needs no exchange at all, and
-this plan on every other input.
+:func:`asof_join_merge` is the same plan under a keyed entry point.
 """
 
 from __future__ import annotations
@@ -83,13 +84,24 @@ def asof_join(
     out_names = {
         c: (c + suffix if c in left.columns else c) for c in right_cols
     }
+    # the by keys cross the union under fresh internal names: Spark 4.1's
+    # union keeps its children's hash partitioning only where they are
+    # equal, column qualifiers included, and a projected catalog column
+    # carries its table's qualifier while the bucketed scan's
+    # partitioning does not — co-bucketed inputs would pay one hash
+    # exchange.  An alias is unqualified on both sides: no exchange.
+    keys = {c: f"__kf_by{i}" for i, c in enumerate(by)}
+    lnames = [keys.get(c, c) for c in left.columns]
     # the union widens a by/on column to both sides' common type (an
     # int key against a double one would come back double): the result
     # casts such a column back to left's type
     ltypes, rtypes = left.dtypes, dict(right.dtypes)
     lcols = [
-        F.col(c).cast(t).alias(c) if c in (*by, on) and rtypes.get(c, t) != t
-        else F.col(c)
+        (
+            F.col(keys.get(c, c)).cast(t)
+            if c in (*by, on) and rtypes.get(c, t) != t
+            else F.col(keys.get(c, c))
+        ).alias(c)
         for c, t in ltypes
     ]
 
@@ -105,7 +117,9 @@ def asof_join(
         else F.struct(*[F.col(c) for c in right_cols])
     )
     rhs = right.select(
-        *[F.col(c) if c in by or c == on else F.lit(None).cast(t).alias(c)
+        *[F.col(c).alias(keys[c]) if c in keys
+          else F.col(c) if c == on
+          else F.lit(None).cast(t).alias(c)
           for c, t in ltypes],
         F.lit(0).alias(_L),
         F.struct(
@@ -117,7 +131,8 @@ def asof_join(
     rv_type = rhs.schema[_RV].dataType
     tb_type = rhs.schema[_TB].dataType
     lhs = left.select(
-        *[F.col(c) for c in left.columns],
+        *[F.col(c).alias(keys[c]) if c in keys else F.col(c)
+          for c in left.columns],
         F.lit(1).alias(_L),
         F.lit(None).cast(rv_type).alias(_RV),
         F.lit(None).cast(tb_type).alias(_TB),
@@ -126,7 +141,8 @@ def asof_join(
 
     if direction == "nearest":
         return _asof_nearest(
-            unioned, left, on, by, right_cols, out_names, tolerance_ns, lcols
+            unioned, lnames, on, list(keys.values()), right_cols, out_names,
+            tolerance_ns, lcols,
         )
     if direction not in ("backward", "forward"):
         raise ArgsError(
@@ -135,7 +151,7 @@ def asof_join(
     fwd = direction == "forward"
     # forward: left rows sort before equal-ts right rows so the
     # (currentRow, following) frame still sees them; fill = first match
-    w = Window.partitionBy(*[F.col(c) for c in by]).orderBy(
+    w = Window.partitionBy(*[F.col(k) for k in keys.values()]).orderBy(
         F.col(on).asc(),
         F.col(_L).desc() if fwd else F.col(_L).asc(),
         F.col(_TB).asc(),
@@ -151,7 +167,7 @@ def asof_join(
         else F.last(F.col(_RV), ignorenulls=True)
     )
     filled = unioned.select(
-        *[F.col(c) for c in left.columns],
+        *[F.col(c) for c in lnames],
         F.col(_L),
         fill.over(w).alias(_RV),
     )
@@ -183,7 +199,7 @@ _RVF = "__kf_rv_fwd"
 
 def _asof_nearest(
     unioned: DataFrame,
-    left: DataFrame,
+    lnames: list,
     on: str,
     by: list,
     right_cols: Sequence[str],
@@ -210,7 +226,7 @@ def _asof_nearest(
     wb = w0.rowsBetween(Window.unboundedPreceding, Window.currentRow)
     wf = w0.rowsBetween(Window.currentRow, Window.unboundedFollowing)
     filled = unioned.select(
-        *[F.col(c) for c in left.columns],
+        *[F.col(c) for c in lnames],
         F.col(_L),
         F.last(F.col(_RV), ignorenulls=True).over(wb).alias(_RVB),
         F.first(F.col(_RV), ignorenulls=True).over(wf).alias(_RVF),
@@ -255,90 +271,21 @@ def asof_join_merge(
     suffix: str = "_r",
     direction: str = "backward",
 ) -> DataFrame:
-    """Same semantics as :func:`asof_join` (all three directions).  Runs
-    as a per-key cogrouped ``pandas.merge_asof`` where that is the
-    zero-exchange plan, and as the window plan everywhere else.
+    """The keyed entry point of :func:`asof_join`: the same plan and
+    semantics (all three directions), with at least one ``by`` key
+    required.
 
-    The choice is read off the inputs.  The cogroup needs equal
-    ``by``/``on`` types on both sides: co-bucketed int and bigint keys
-    hash to different buckets yet plan no exchange, and pandas refuses
-    mismatched merge keys (the window widens both sides).  Then its
-    physical plan is inspected: with no ``Exchange`` in it the inputs are
-    already clustered on ``by`` (e.g. both saved with
-    ``Workspace.save_bucketed`` on ``by``, one bucket count) and the
-    as-of streams matching bucket files pairwise; the window plan would
-    add one hash exchange there, since on Spark 4.1 a union whose
-    children carry computed projections loses the bucketed
-    partitioning.  On any other input the cogroup shuffles both sides
-    and the window is cheaper: with a 19-column right side
-    (``perfbench`` ``asof_wide``, 4 cores, 3 warm runs) the window took
-    0.22-0.26 s and the cogroup 0.76-0.79 s — the window fills one
-    struct per row, not one column at a time.  Tie conventions match
-    the window's by construction, and Spark, not pandas, decides key
-    identity (NULL and NaN keys included).
-
-    Requires at least one ``by`` key (the window variant also supports
-    global as-of).
+    There is no per-key cogrouped ``pandas.merge_asof`` behind it: the
+    window plan beat one on every input measured (4 cores) — with a
+    19-column right side (``perfbench`` ``asof_wide``, 3 warm runs)
+    0.22-0.26 s against 0.76-0.79 s, and on inputs co-bucketed on
+    ``by`` (``asof_bucketed_colocated`` at sf0.1: 100k events against
+    150k orders in 8 buckets, 8 interleaved warm rounds) 0.225 s
+    against 8.97 s median, with no exchange in either plan.
     """
-    import pandas as pd
-
     by = [by] if isinstance(by, str) else list(by)
     if not by:
         raise ArgsError("asof_join_merge requires at least one `by` key")
-    if direction not in ("backward", "forward", "nearest"):
-        raise ArgsError(
-            f"direction must be backward/forward/nearest, got {direction!r}"
-        )
-    if right_cols is None:
-        right_cols = [c for c in right.columns if c not in by and c != on]
-    out_names = {c: (c + suffix if c in left.columns else c) for c in right_cols}
-    ltypes, rtypes = dict(left.dtypes), dict(right.dtypes)
-    out_schema = ", ".join(
-        [f"`{c}` {t}" for c, t in ltypes.items()]
-        + [f"`{out_names[c]}` {rtypes[c]}" for c in right_cols]
-    )
-    out_cols = [*ltypes, *[out_names[c] for c in right_cols]]
-    # pandas nullable dtypes keep int/bool columns intact when unmatched
-    # left rows introduce missing values (plain int64 would float-ify)
-    _NULLABLE = {
-        "tinyint": "Int8", "smallint": "Int16", "int": "Int32",
-        "bigint": "Int64", "boolean": "boolean",
-    }
-
-    # unique right-side names BEFORE cogroup: when left and right share
-    # lineage (e.g. both filtered from one frame), duplicate attribute
-    # ids make Catalyst mis-prune the right child's columns
-    rpre = right.toDF(*[f"__r_{c}" for c in right.columns])
-    r_on, r_carry = f"__r_{on}", [f"__r_{c}" for c in right_cols]
-    r_renames = {r_on: on, **{f"__r_{c}": out_names[c] for c in right_cols}}
-
-    def merge_key(lpdf: pd.DataFrame, rpdf: pd.DataFrame) -> pd.DataFrame:
-        rsel = rpdf[[r_on, *r_carry]].sort_values(
-            [r_on, *r_carry], kind="mergesort"
-        )
-        merged = pd.merge_asof(
-            lpdf.sort_values(on, kind="mergesort"),
-            rsel.rename(columns=r_renames),
-            on=on,
-            direction=direction,
-            allow_exact_matches=True,
-            tolerance=tolerance_ns,
-        )
-        for c in right_cols:
-            want = _NULLABLE.get(rtypes[c])
-            if want:
-                merged[out_names[c]] = merged[out_names[c]].astype(want)
-        return merged[out_cols]
-
-    if all(ltypes.get(c) == rtypes.get(c) for c in (*by, on)):
-        cogrouped = (
-            left.groupBy(*by)
-            .cogroup(rpre.groupBy(*[f"__r_{c}" for c in by]))
-            .applyInPandas(merge_key, schema=out_schema)
-        )
-        plan = cogrouped._jdf.queryExecution().executedPlan().toString()
-        if "Exchange" not in plan:
-            return cogrouped
     return _asof_window(
         left, right, on, by, right_cols, tolerance_ns,
         suffix=suffix, direction=direction,

@@ -49,8 +49,6 @@ from contextlib import redirect_stdout
 
 from pyspark.sql import DataFrame
 
-from .kerfsql import _split_top
-
 #: A Window node in the OPTIMIZED LOGICAL plan prints only its
 #: NON-EMPTY argument groups: `Window [exprs], [partitionSpec],
 #: [orderSpec]` when both are present, `Window [exprs], [spec]` when
@@ -72,30 +70,51 @@ def _explain(df: DataFrame, mode: str) -> str:
     return buf.getvalue()
 
 
-def _generator_inputs(phys: str) -> list[str]:
-    """Each Generate's input expression as a pushed-down filter prints
-    it: the projection aliases it reads (``expr AS name#id``) are
-    substituted back in, the way pushdown inlines them."""
-    defs = {}
-    for m in re.finditer(r"(?m)^Output \[\d+\]: \[(.*)\]$", phys):
-        for item in _split_top(m.group(1)):
-            expr, sep, name = item.rpartition(" AS ")
-            if sep and re.fullmatch(r"\w+#\d+L?", name):
-                defs[name] = expr
+def _nodes(plan):
+    """Every node of a JVM-side plan tree."""
+    stack = [plan]
+    while stack:
+        node = stack.pop()
+        yield node
+        kids = node.children()
+        stack.extend(kids.apply(i) for i in range(kids.size()))
+
+
+def _generator_filter_dup(df: DataFrame) -> bool:
+    """A Filter carries the inferred ``size(<generator input>) > 0``
+    wrapper and that input, with the projection aliases it reads
+    (``expr AS name#id``) substituted back in the way pushdown inlines
+    them, is a lambdafunction body re-indexing with element_at.  Read
+    off the JVM plan's own expressions, not its printed form, whose
+    lists are cut off past ``spark.sql.debug.maxToStringFields``."""
+    defs, gens, conds = {}, [], []
+    for node in _nodes(df._jdf.queryExecution().sparkPlan()):
+        name = node.nodeName()
+        if name == "Project":
+            exprs = node.projectList()
+            for e in (exprs.apply(i) for i in range(exprs.size())):
+                if e.getClass().getSimpleName() == "Alias":
+                    defs[e.toAttribute().toString()] = e.child().toString()
+        elif name == "Generate":
+            gens.append(node.generator().children().apply(0).toString())
+        elif name == "Filter":
+            conds.append(node.condition().toString())
     token = re.compile(r"\b\w+#\d+L?\b")
-    gens = []
-    for m in re.finditer(
-        r"(?m)^\(\d+\) Generate\b.*\n(?:.+\n)*?Arguments: (.*)$", phys
-    ):
-        call = _split_top(m.group(1))[0]  # explode(<input>)
-        g = call[call.index("(") + 1:-1]
+    for g in gens:
         for _ in range(len(defs)):
             inlined = token.sub(lambda t: defs.get(t.group(0), t.group(0)), g)
             if inlined == g:
                 break
             g = inlined
-        gens.append(g)
-    return gens
+        # size's second argument is legacySizeOfNull: false under ANSI
+        wrapper = re.compile(re.escape(f"size({g}, ") + r"(true|false)\) > 0")
+        if (
+            "lambdafunction(" in g
+            and "element_at(" in g
+            and any(wrapper.search(c) for c in conds)
+        ):
+            return True
+    return False
 
 
 def lint_plan(df: DataFrame) -> list[str]:
@@ -117,18 +136,8 @@ def lint_plan(df: DataFrame) -> list[str]:
     # arrays_zip rebuild still infers a lambdafunction filter, but
     # without the per-element element_at re-indexing; a user's own
     # element_at-lambda predicate wraps something else)
-    conds = [
-        ls for ls in (line.lstrip() for line in phys.splitlines())
-        if ls.startswith("Condition")
-    ]
-    for g in _generator_inputs(phys) if conds else ():
-        if (
-            "lambdafunction(" in g
-            and "element_at(" in g
-            and any(f"size({g}, false) > 0" in c for c in conds)
-        ):
-            tags.add("generator-filter-dup")
-            break
+    if "Generate" in phys and _generator_filter_dup(df):
+        tags.add("generator-filter-dup")
     # inspect only the optimized-logical section of the extended output
     opt = logical.split("== Optimized Logical Plan ==")[-1]
     opt = opt.split("== Physical Plan ==")[0]

@@ -4472,10 +4472,8 @@ def q19(spark, sf):
     """,
 )
 def asof_merge_latest_order(spark, sf):
-    """The same as-of through ``asof_join_merge``: on these unbucketed
-    inputs the cogroup would shuffle both sides, so it takes the window
-    plan (``asof_bucketed_colocated`` is the shape that keeps the
-    cogroup).  Same oracle as the window variant."""
+    """The same as-of through ``asof_join_merge``, the keyed entry
+    point of the window plan.  Same oracle as the window variant."""
     e = _t(spark, sf, "events").select("event_id", "user_id", "ts")
     o = _t(spark, sf, "orders").select(
         F.col("o_custkey").alias("user_id"),
@@ -9058,9 +9056,9 @@ def key_skew_profile(spark, sf):
 )
 def asof_bucketed_colocated(spark, sf):
     """ZERO-SHUFFLE as-of join: both sides persisted hash-bucketed on
-    the by-key (`Workspace.save_bucketed`), then the cogrouped
-    merge_asof strategy — the bucketed scan satisfies the cogroup's
-    required distribution, so the whole as-of runs with no exchange at
+    the by-key (`Workspace.save_bucketed`), then the window as-of — the
+    union of the bucketed scans keeps their distribution, which
+    satisfies the window's, so the whole as-of runs with no exchange at
     all (pinned by plan test).  At 100 TB this is the difference
     between an as-of that re-shuffles the tick store on every query and
     one that streams matching bucket files pairwise."""

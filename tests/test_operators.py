@@ -468,8 +468,7 @@ def test_asof_fixture_scale(spark, tables):
 # ----------------------------------------------------- asof merge variant
 def _cobucketed(spark, root, by, **frames):
     """Save each frame hash-bucketed on ``by`` (2 buckets) and load it
-    back: the one input shape on which ``asof_join_merge`` runs its
-    cogroup instead of routing to the window plan."""
+    back: the input shape on which the as-of plans no exchange."""
     from kerf_spark.sources.catalog import Workspace
 
     ws = Workspace(spark, str(root))
@@ -483,40 +482,39 @@ def _exchanges(df):
 
 
 def test_asof_merge_equals_window_variant(spark, tables, tmp_path):
-    """The cogroup (co-bucketed inputs) must agree row-for-row with the
-    window plan on fixture data."""
+    """On co-bucketed inputs (no exchange: the window's union keeps the
+    bucketed scans' clustering) the as-of must agree row-for-row with
+    the same join on the plain inputs (one hash exchange), on fixture
+    data."""
     from pyspark.sql import functions as F
 
     from kerf_spark.operators.asof import asof_join, asof_join_merge
 
     ev = tables["events"].select("user_id", "event_id", "ts", "value")
-    left, right = _cobucketed(
-        spark, tmp_path, "user_id",
-        ev_left=ev.where(F.col("event_id") % 3 == 0),
-        ev_right=ev.where(F.col("event_id") % 3 != 0).select(
-            "user_id", "ts", F.col("value").alias("rv")
-        ),
+    lf = ev.where(F.col("event_id") % 3 == 0)
+    rf = ev.where(F.col("event_id") % 3 != 0).select(
+        "user_id", "ts", F.col("value").alias("rv")
     )
-    a = asof_join(
-        left, right, on="ts", by="user_id", right_cols=["rv"]
-    ).select("event_id", "ts", "rv")
+    left, right = _cobucketed(
+        spark, tmp_path, "user_id", ev_left=lf, ev_right=rf
+    )
+    plain = asof_join(lf, rf, on="ts", by="user_id", right_cols=["rv"])
+    assert _exchanges(plain) == 1
+    a = plain.select("event_id", "ts", "rv")
     merged = asof_join_merge(
         left, right, on="ts", by="user_id", right_cols=["rv"]
     )
-    assert _exchanges(merged) == 0  # the cogroup ran, not the window
+    assert _exchanges(merged) == 0
     b = merged.select("event_id", "ts", "rv")
     assert a.subtract(b).count() == 0 and b.subtract(a).count() == 0
     assert a.count() == left.count()
+    assert b.where(F.col("rv").isNotNull()).count() > 0
 
 
 def test_asof_merge_bucket_path_nulls_and_mixed_dtypes(spark, tmp_path):
     """``asof_join_merge`` keeps Spark's group identity for NULL keys
-    (NULL = NULL matches; pandas ``by`` matching alone would drop them)
-    and survives the dtype skew a null-carrying key column picks up in
-    the Arrow->pandas conversion (int64 in one group, float64 in
-    another), on long and on double keys. Plain inputs take the window
-    plan, co-bucketed inputs the per-key cogroup; the window variant is
-    the semantic oracle for both."""
+    (NULL = NULL matches), on long and on double keys, on plain inputs
+    (one hash exchange) and on co-bucketed ones (no exchange)."""
     from pyspark.sql import functions as F
 
     from kerf_spark.operators.asof import asof_join, asof_join_merge
@@ -535,6 +533,9 @@ def test_asof_merge_bucket_path_nulls_and_mixed_dtypes(spark, tmp_path):
     def res(df):
         return {r["lid"]: r["px"] for r in df.select("lid", "px").collect()}
 
+    # equal stamps are visible (lid 12); the NULL-key rows match the
+    # NULL-key right rows (13, 14); key 3 has no right rows (15)
+    want = {10: 1.0, 11: 2.0, 12: 3.0, 13: 4.0, 14: 5.0, 15: None}
     dbl = F.col("k").cast("double")
     for name, (lf, rf) in {
         "long_keys": (left, right),
@@ -545,12 +546,11 @@ def test_asof_merge_bucket_path_nulls_and_mixed_dtypes(spark, tmp_path):
         )
         for plain, (a, b) in ((True, (lf, rf)), (False, cobucketed)):
             got = asof_join_merge(a, b, on="ts", by="k", right_cols=["px"])
-            if not plain:
-                assert _exchanges(got) == 0, name  # the cogroup ran
-            want = asof_join(a, b, on="ts", by="k", right_cols=["px"])
-            assert res(got) == res(want), (name, plain)
-            # the NULL-key rows really did match the NULL-key right rows
-            assert res(got)[13] == 4.0 and res(got)[14] == 5.0, (name, plain)
+            # a floating key partitions on its NaN/-0.0-normalized value,
+            # which the bucket hash is not: co-bucketed, it still shuffles
+            shuffles = plain or name == "double_keys"
+            assert _exchanges(got) == int(shuffles), (name, plain)
+            assert res(got) == want, (name, plain)
 
 
 @pytest.mark.parametrize(
@@ -566,8 +566,9 @@ def test_asof_merge_mixed_key_types_match(
 ):
     """Key types that differ between the sides, or a ``by`` key listed
     in ``right_cols``, still match equal key values, on plain and on
-    co-bucketed inputs (where int and bigint keys sit in different
-    buckets); the result keeps the left key's type."""
+    co-bucketed inputs (where keys of different types sit in different
+    buckets, so the plan must shuffle); the result keeps the left key's
+    type."""
     from kerf_spark.operators.asof import asof_join, asof_join_merge
 
     left = spark.range(1, 40).selectExpr(
@@ -579,6 +580,8 @@ def test_asof_merge_mixed_key_types_match(
     cobucketed = _cobucketed(spark, tmp_path, "k", l=left, r=right)
     for lf, rf in ((left, right), cobucketed):
         got = asof_join_merge(lf, rf, on="ts", by="k", right_cols=right_cols)
+        if lf is cobucketed[0]:
+            assert _exchanges(got) == (0 if ltype == rtype else 1)
         want = asof_join(lf, rf, on="ts", by="k", right_cols=right_cols)
         assert {r["px"] for r in got.collect()} == {5.0}
         assert sorted(got.collect()) == sorted(want.collect())
@@ -1929,10 +1932,10 @@ def test_bronze_log_scd2_fold_is_order_insensitive(spark):
 
 
 def test_asof_strategies_agree_all_directions(spark, tmp_path):
-    """Window forward-fill and the cogrouped merge_asof (co-bucketed
-    inputs) must agree row for row in every direction, with and
-    without tolerance — also on NULL keys (NULL = NULL matches, as in
-    Spark grouping) and on double keys."""
+    """The as-of on co-bucketed inputs (no exchange) and on the plain
+    inputs (one hash exchange) must agree row for row in every
+    direction, with and without tolerance — also on NULL keys (NULL =
+    NULL matches, as in Spark grouping) and on double keys."""
     from pyspark.sql import functions as F
 
     from kerf_spark.operators.asof import asof_join, asof_join_merge
@@ -1964,7 +1967,7 @@ def test_asof_strategies_agree_all_directions(spark, tmp_path):
         "double_keys": (nl.withColumn("k", dbl), nr.withColumn("k", dbl)),
     }
     for name, (lf, rf) in inputs.items():
-        lf, rf = _cobucketed(
+        bl, br = _cobucketed(
             spark, tmp_path / name, "k", **{f"{name}_l": lf, f"{name}_r": rf}
         )
         for direction in ("backward", "forward", "nearest"):
@@ -1977,10 +1980,10 @@ def test_asof_strategies_agree_all_directions(spark, tmp_path):
                     ).collect()
                 }
                 merged = asof_join_merge(
-                    lf, rf, on="ts", by="k",
+                    bl, br, on="ts", by="k",
                     direction=direction, tolerance_ns=tol,
                 )
-                assert _exchanges(merged) == 0, name
+                assert _exchanges(merged) == int(name == "double_keys")
                 b = {r["lid"]: r["px"] for r in merged.collect()}
                 assert a == b, (name, direction, tol)
                 if name == "null_keys" and (direction, tol) == ("backward", None):

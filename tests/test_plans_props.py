@@ -65,8 +65,8 @@ def test_positional_family_cuts_before_numbering(spark):
 
 
 def test_asof_join_shuffles_exactly_once(spark):
-    """Also asof_join_merge on inputs not clustered on the by-key: the
-    cogroup would shuffle both sides, so it takes the window plan."""
+    """On inputs not clustered on the by-key, through both entry
+    points (asof_join_merge is the keyed alias of the same plan)."""
     from kerf_spark.operators.asof import asof_join, asof_join_merge
 
     t = spark.createDataFrame(
@@ -80,13 +80,12 @@ def test_asof_join_shuffles_exactly_once(spark):
         # one hash-partitioning exchange for the window; unions are
         # shuffle-free
         assert plan.count("Exchange hashpartitioning") == 1, fn.__name__
-        assert "FlatMapCoGroupsInPandas" not in plan, fn.__name__
 
 
 def test_bucketed_asof_runs_with_zero_exchanges(spark):
     """The zero-shuffle as-of: both sides bucketed on the by-key, the
-    cogrouped merge strategy inherits the bucketed scan's distribution,
-    and the executed plan contains NO Exchange of any kind."""
+    window plan's union inherits the bucketed scans' distribution, and
+    the executed plan contains NO Exchange of any kind."""
     df = QUERIES["asof_bucketed_colocated"](spark, SF)
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert plan.count("Exchange") == 0
@@ -921,6 +920,16 @@ def test_lint_plan_detects_each_antipattern(spark):
         " element_at(__w, i + 1))) as __g",
     ).selectExpr("id", "explode(__g) as g")
     assert "generator-filter-dup" in lint_plan(bad)
+    # ... also in a projection wider than the 25 fields a printed plan
+    # list may keep (spark.sql.debug.maxToStringFields)
+    wide = [f"id + {i} as c{i}" for i in range(30)]
+    bad_wide = words.selectExpr(
+        "id", *wide,
+        "transform(sequence(1, size(__w) - 1),"
+        " i -> concat_ws(' ', element_at(__w, i),"
+        " element_at(__w, i + 1))) as __g",
+    ).selectExpr("id", *[f"c{i}" for i in range(30)], "explode(__g) as g")
+    assert "generator-filter-dup" in lint_plan(bad_wide)
     # ... while the arrays_zip rebuild (cheap struct-field body) and a
     # deliberate element_at filter WITHOUT a Generate both stay clean
     good = words.selectExpr(

@@ -5,12 +5,19 @@ local[$SPARK_GRAFT_CPUS] and prints ONE JSON line.
 Each query executes to completion via the noop sink (full computation,
 no driver materialization).  A warmup query amortizes JVM/codegen
 startup out of the per-query numbers.
+
+``python bench.py --only ROW [--runs N]`` times one row instead (a
+registry row or a bench-only callable): a warmup run, then N timed
+noop-sink runs (default 4) in the same session settings; it prints the
+per-run seconds, min and median.
 """
 
 from __future__ import annotations
 
+import argparse
 import json
 import os
+import statistics
 import sys
 import time
 
@@ -135,23 +142,20 @@ BENCH_QUERIES = [
 
 
 def main() -> None:
+    ap = argparse.ArgumentParser(description="kerf_spark headline bench")
+    ap.add_argument("--only", metavar="ROW", help="time this one row")
+    ap.add_argument("--runs", type=int, default=4, metavar="N")
+    args = ap.parse_args()
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     try:
         sf = float(sf_dir.rstrip("/").rsplit("sf", 1)[-1])
     except ValueError:
         sf = -1.0
 
-    from kerf_spark import queries as Q
-    from kerf_spark.queries import QUERIES
+    from kerf_spark.queries import _BENCH_ONLY, QUERIES
     from kerf_spark.session import get_spark
 
-    # xxhash64 fast paths: bench-only callables (their hash family has no
-    # DuckDB oracle, so they live outside the correctness registry; the
-    # oracle-checked portable twins are registry entries)
-    extra = {
-        "minhash_dedup_pairs": Q.minhash_dedup_pairs,
-        "ivf_ann_topk": Q.ivf_ann_topk,
-    }
+    rows = {**QUERIES, **_BENCH_ONLY}
 
     # no console progress bar: its \r-fragments interleave with stdout
     # and can hide the final JSON line mid-line in a redirected log (the
@@ -163,9 +167,19 @@ def main() -> None:
 
     def run(name: str) -> float:
         t0 = time.perf_counter()
-        df = (QUERIES.get(name) or extra[name])(spark, sf_dir)
+        df = rows[name](spark, sf_dir)
         df.write.format("noop").mode("overwrite").save()
         return round(time.perf_counter() - t0, 4)
+
+    if args.only:
+        run(args.only)  # warmup (codegen, file listing, memoized fits)
+        ts = [run(args.only) for _ in range(args.runs)]
+        print(
+            f"{args.only}: runs={ts} min={min(ts)} "
+            f"median={statistics.median(ts)}"
+        )
+        spark.stop()
+        return
 
     run("q1_pricing_summary")  # warmup: JVM + parquet footer caches
 
@@ -197,8 +211,6 @@ def main() -> None:
     # spreads each query's samples across the run's phases, so the
     # per-query median averages over host contention instead of
     # landing inside one burst.
-    import statistics
-
     samples: dict[str, list[float]] = {n: [] for n in BENCH_QUERIES}
     for name in BENCH_QUERIES:
         run(name)  # per-query warmup: codegen compile + file listing
@@ -248,7 +260,7 @@ def main() -> None:
 
             def run_at(name: str, d: str) -> float:
                 t0 = time.perf_counter()
-                (QUERIES.get(name) or extra[name])(spark, d).write.format(
+                rows[name](spark, d).write.format(
                     "noop"
                 ).mode("overwrite").save()
                 return round(time.perf_counter() - t0, 4)

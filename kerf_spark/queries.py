@@ -21,6 +21,7 @@ values at 12 significant digits).  Conventions applied throughout:
 
 from __future__ import annotations
 
+import atexit
 import logging
 
 from collections.abc import Callable
@@ -52,6 +53,30 @@ ORACLES: dict[str, str] = {}
 
 
 _LOG = logging.getLogger(__name__)
+
+#: this process's scratch root, made on first use
+_SCRATCH: list[str] = []
+
+
+def _scratch(prefix: str) -> str:
+    """A fresh dir for a row's throwaway files (stream sources and
+    checkpoints, round-trip writes, per-call workspaces).  Every one
+    lives under ONE per-process root that is removed at interpreter
+    exit: rows return lazy DataFrames over these files, so nothing can
+    go sooner.  Deterministic build-once caches use _ann_index_dir."""
+    import tempfile
+
+    if not _SCRATCH:
+        _SCRATCH.append(tempfile.mkdtemp(prefix="kerf_scratch_"))
+    return tempfile.mkdtemp(prefix=prefix, dir=_SCRATCH[0])
+
+
+@atexit.register
+def _drop_scratch() -> None:
+    import shutil
+
+    while _SCRATCH:
+        shutil.rmtree(_SCRATCH.pop(), ignore_errors=True)
 
 
 def query(name: str, oracle: str | None = None):
@@ -1757,7 +1782,6 @@ def bm25_stream_append_topk(spark, sf):
     mismatch."""
     import os
     import shutil
-    import tempfile
 
     from .streaming.ingest import fanout, read_file_stream
 
@@ -1776,7 +1800,7 @@ def bm25_stream_append_topk(spark, sf):
     # absorbs the replay) and compacts; a crash inside compaction sets
     # the folding marker, which is_stale reports -> full rebuild
     if stale or not TI.index_meta(path).get("compactions"):
-        root = tempfile.mkdtemp(prefix="kerf_textstream_")
+        root = _scratch("kerf_textstream_")
         for i in range(2):  # two source files -> two genuine epochs
             odd.where((F.col("doc_id") % 4) == (2 * i + 1)).coalesce(
                 1
@@ -2123,9 +2147,9 @@ def substring_dedup_spans(spark, sf):
 # (b) twin-equality + brute-force unit tests
 # (tests/test_operators.py::test_minhash_fast_path_matches_portable_twin_and_bruteforce,
 # ::test_simhash64_matches_python_bitvote); their throughput is
-# measured directly in bench.py (keys minhash_dedup_pairs /
-# ivf_ann_topk).  lsh_topk / ivf_topk use deterministic LCG
-# hyperplanes / sampled centroids, which ARE oracle-reproducible — they
+# measured directly in bench.py (through _BENCH_ONLY below).
+# lsh_topk / ivf_topk use deterministic LCG hyperplanes / sampled
+# centroids, which ARE oracle-reproducible — they
 # are registered with full oracles as lsh_ann_topk_oracle /
 # ivf_ann_topk_oracle below.
 
@@ -2145,6 +2169,14 @@ def ivf_ann_topk(spark, sf):
     return SIM.ivf_topk(em, q, k=5, n_cells=8, nprobe=4).select(
         "query_id", "neighbor_id", "rank"
     )
+
+
+#: Bench-only callables: run by bench.py and tools/plan_dump.py by name
+#: like registry rows, but outside QUERIES (no oracle is possible).
+_BENCH_ONLY: dict[str, QueryFn] = {
+    "minhash_dedup_pairs": minhash_dedup_pairs,
+    "ivf_ann_topk": ivf_ann_topk,
+}
 
 
 #: The exact-cosine top-5 oracle — ONE definition shared by the
@@ -2693,8 +2725,6 @@ def stream_fanout_sinks(spark, sf):
     table directly × both sink labels, so a green row proves NEITHER
     sink dropped or duplicated a record.  Sums over value accumulate
     integer cents (association-order-immune)."""
-    import tempfile
-
     from .streaming.ingest import (
         fanout, parquet_epoch_sink, read_file_stream,
     )
@@ -2702,7 +2732,7 @@ def stream_fanout_sinks(spark, sf):
     e = _t(spark, sf, "events").select(
         "event_id", "event_type", "value"
     )
-    root = tempfile.mkdtemp(prefix="kerf_fanout_")
+    root = _scratch("kerf_fanout_")
     for i in range(2):  # two source files -> two genuine epochs
         e.where(F.col("event_id") % 2 == i).coalesce(1).write.mode(
             "overwrite"
@@ -3192,10 +3222,8 @@ def applyinpandas_zscore(spark, sf):
 def csv_roundtrip(spark, sf):
     """CSV sink+source (kerf1 read_table_from_delimited_file, SURVEY
     §2.1): write region as CSV, read it back with header+schema."""
-    import tempfile
-
     r = _t(spark, sf, "region")
-    path = tempfile.mkdtemp(prefix="kerf_csv_") + "/region"
+    path = _scratch("kerf_csv_") + "/region"
     r.write.mode("overwrite").option("header", True).csv(path)
     return (
         spark.read.option("header", True)
@@ -3210,10 +3238,8 @@ def csv_roundtrip(spark, sf):
 )
 def json_roundtrip(spark, sf):
     """JSON-lines sink+source (atlas I/O hooks, jump.h:190-191)."""
-    import tempfile
-
     n = _t(spark, sf, "nation")
-    path = tempfile.mkdtemp(prefix="kerf_json_") + "/nation"
+    path = _scratch("kerf_json_") + "/nation"
     n.write.mode("overwrite").json(path)
     return spark.read.json(path).select("n_nationkey", "n_name", "n_regionkey")
 
@@ -3229,11 +3255,9 @@ def workspace_roundtrip(spark, sf):
     """Workspace save/load (the Kerf Tree, file.h:34-36, test.cc:825-900):
     persist a named table into a Workspace catalog, reload it by name,
     aggregate the reloaded copy."""
-    import tempfile
-
     from .sources.catalog import Workspace
 
-    ws = Workspace(spark, tempfile.mkdtemp(prefix="kerf_ws_"))
+    ws = Workspace(spark, _scratch("kerf_ws_"))
     o = _t(spark, sf, "orders").where(F.col("o_custkey") <= 500)
     ws.save("orders_small", o)
     back = ws.load("orders_small")
@@ -3265,14 +3289,12 @@ def workspace_tree_roundtrip(spark, sf):
     vector land as computed literal columns the oracle pins.  A wrong
     round-trip of ANY plane (scalar bits, lambda source, map entry,
     vector dtype, table rows) flips the hash."""
-    import tempfile
-
     from .plans.kerf_lang import Env, Interp
     from .sources.tree import load_tree, save_tree
 
     import numpy as np
 
-    root = tempfile.mkdtemp(prefix="kerf_tree_")
+    root = _scratch("kerf_tree_")
     interp = Interp(spark)
     env = Env()
     interp.exec_stmt("rate: 0.25", env)
@@ -3324,11 +3346,9 @@ def compact_roundtrip(spark, sf):
     driver's oracle.  The guards raise if compaction failed to merge
     files or restore the claim, so a green row certifies the
     maintenance op, not just the aggregate."""
-    import tempfile
-
     from .sources.catalog import Workspace
 
-    ws = Workspace(spark, tempfile.mkdtemp(prefix="kerf_cmp_"))
+    ws = Workspace(spark, _scratch("kerf_cmp_"))
     o = _t(spark, sf, "orders").where(F.col("o_custkey") <= 300)
     ws.save("t", o.orderBy("o_orderkey"), sort_by=["o_orderkey"])
     ws.append("t", o)  # unordered append: demotes sorted -> 'files'
@@ -3362,11 +3382,9 @@ def bucketed_join_colocated(spark, sf):
     with zero exchanges — the pre-shuffled folio layout
     (presented.cc:435) as Spark's bucketed-table contract.  Plan shape
     pinned in tests/test_sources_plans.py."""
-    import tempfile
-
     from .sources.catalog import Workspace
 
-    ws = Workspace(spark, tempfile.mkdtemp(prefix="kerf_ws_bkt_"))
+    ws = Workspace(spark, _scratch("kerf_ws_bkt_"))
     ws.save_bucketed(
         "orders_bkt", _t(spark, sf, "orders"), ["o_custkey"],
         num_buckets=8, sort_by=["o_custkey"],
@@ -3412,11 +3430,9 @@ def narrow_width_roundtrip(spark, sf):
     values (k needs bigint, v needs int), and the read-back surfaces ALL
     rows at the promoted widths — old narrow files upcast through the
     manifest read schema, no data rewrite."""
-    import tempfile
-
     from .sources.catalog import Workspace
 
-    ws = Workspace(spark, tempfile.mkdtemp(prefix="kerf_nw_"))
+    ws = Workspace(spark, _scratch("kerf_nw_"))
     base = (
         _t(spark, sf, "orders")
         .where(F.col("o_custkey") <= 200)
@@ -4170,14 +4186,12 @@ def folio_partition_prune(spark, sf):
     Workspace, then aggregate a 3-day slice.  The date filter prunes at
     the directory level — the scan never opens out-of-range partitions
     (the folio per-part pruning discipline)."""
-    import tempfile
-
     from .sources.catalog import Workspace
 
     e = _t(spark, sf, "events").withColumn(
         "date", TM.ns_to_date("ts")
     )
-    ws = Workspace(spark, tempfile.mkdtemp(prefix="kerf_folio_"))
+    ws = Workspace(spark, _scratch("kerf_folio_"))
     ws.save("events_by_date", e, partition_by=["date"], sort_by=["ts"])
     back = ws.load("events_by_date")
     return (
@@ -4834,8 +4848,6 @@ def stream_incremental_dedup(spark, sf):
     stored-index discipline) via ``foreachBatch``, and admitted rows
     append to a parquet sink.  Same oracle as the batch twin: streaming
     must admit exactly the docs the batch pipeline admits."""
-    import tempfile
-
     from .operators.text import fingerprint_md5
     from .streaming.ingest import stream_table
 
@@ -4848,7 +4860,7 @@ def stream_incremental_dedup(spark, sf):
     ib, ish = DD.portable_band_keys(index)
     ib, ish = ib.persist(), ish.persist()
     ifp = index.select(fingerprint_md5("text").alias("fp")).persist()
-    out_dir = tempfile.mkdtemp(prefix="kerf_stream_incr_")
+    out_dir = _scratch("kerf_stream_incr_")
 
     def admit(bdf, _epoch):
         batch = bdf.where(F.col("doc_id") >= 400)
@@ -5349,7 +5361,6 @@ def ivf_stream_append_topk(spark, sf):
     replays an epoch)."""
     import os
     import shutil
-    import tempfile
 
     from .streaming.ingest import fanout, read_file_stream
 
@@ -5367,7 +5378,7 @@ def ivf_stream_append_topk(spark, sf):
         shutil.rmtree(path, ignore_errors=True)
         AI.build_ivf_index(even, path, n_cells=8)
     if stale or AI.index_meta(path)["rows"] < full:
-        root = tempfile.mkdtemp(prefix="kerf_ivfstream_")
+        root = _scratch("kerf_ivfstream_")
         for i in range(2):  # two source files -> two genuine epochs
             odd.where((F.col("vec_id") % 4) == (2 * i + 1)).coalesce(
                 1
@@ -5402,7 +5413,6 @@ def ivf_stream_upsert_topk(spark, sf):
     a double-counted id is a value mismatch."""
     import os
     import shutil
-    import tempfile
 
     from .streaming.ingest import fanout, read_file_stream
 
@@ -5417,7 +5427,7 @@ def ivf_stream_upsert_topk(spark, sf):
     if stale:
         shutil.rmtree(path, ignore_errors=True)
         AI.build_ivf_index(em, path, n_cells=8)
-        root = tempfile.mkdtemp(prefix="kerf_ivfcdc_")
+        root = _scratch("kerf_ivfcdc_")
         for i, res in enumerate((3, 7)):  # two change batches
             em.where(changed == res).select(
                 "vec_id", F.reverse("embedding").alias("embedding")
@@ -9062,12 +9072,10 @@ def asof_bucketed_colocated(spark, sf):
     all (pinned by plan test).  At 100 TB this is the difference
     between an as-of that re-shuffles the tick store on every query and
     one that streams matching bucket files pairwise."""
-    import tempfile
-
     from .operators.asof import asof_join_merge
     from .sources.catalog import Workspace
 
-    ws = Workspace(spark, tempfile.mkdtemp(prefix="kerf_ws_asof_"))
+    ws = Workspace(spark, _scratch("kerf_ws_asof_"))
     ev = _t(spark, sf, "events").select("event_id", "user_id", "ts")
     orders = _t(spark, sf, "orders").select(
         F.col("o_custkey").alias("user_id"),
@@ -9134,12 +9142,10 @@ def stream_windowed_hll(spark, sf):
     batching-insensitive, so the stream result equals the batch
     computation bit-for-bit; state per window is capped at m=256 rows
     no matter the traffic."""
-    import tempfile
-
     from .operators import sketches as SKCH
     from .streaming.ingest import stream_table
 
-    out_dir = tempfile.mkdtemp(prefix="kerf_stream_whll_")
+    out_dir = _scratch("kerf_stream_whll_")
 
     def fold_batch(bdf, _epoch):
         # integer div, not floor(double /): ns-scale longs exceed
@@ -9353,8 +9359,6 @@ def stream_scd2_history(spark, sf):
     spells out why version-only state cannot promise this).  Both
     state frames are eagerly checkpointed per batch: bounded lineage,
     no recompute chain."""
-    import tempfile
-
     from pyspark.sql.types import (
         LongType,
         StructField,
@@ -9376,7 +9380,7 @@ def stream_scd2_history(spark, sf):
         .where(F.col("__prev").isNull() | (F.col("__prev") != F.col("state")))
         .select("user_id", "tu", "state")
     ).localCheckpoint()  # one window pass, not one per chunk write
-    src_dir = tempfile.mkdtemp(prefix="kerf_scd2_src_")
+    src_dir = _scratch("kerf_scd2_src_")
     # three chunks by time range — three genuine micro-batches
     for i, (lo, hi) in enumerate(
         [(0, 1704844800000000), (1704844800000000, 1705017600000000),
@@ -9429,7 +9433,7 @@ def stream_scd2_history(spark, sf):
         chunk_schema,
         maxFilesPerTrigger=1,
     )
-    ckpt = tempfile.mkdtemp(prefix="kerf_scd2_ckpt_")
+    ckpt = _scratch("kerf_scd2_ckpt_")
     q = (
         stream.writeStream.foreachBatch(fold_batch)
         .option("checkpointLocation", ckpt)
@@ -10564,12 +10568,10 @@ def stream_hll_users(spark, sf):
     batch twin bit-for-bit (same oracle as `hll_distinct_users`),
     regardless of how the source splits into micro-batches
     (maxFilesPerTrigger=1 forces at least one real merge)."""
-    import tempfile
-
     from .operators import sketches as SKCH
     from .streaming.ingest import stream_table
 
-    out_dir = tempfile.mkdtemp(prefix="kerf_stream_hll_")
+    out_dir = _scratch("kerf_stream_hll_")
 
     def fold_batch(bdf, _epoch):
         SKCH.hll_registers(bdf, "user_id", ["event_type"]).write.mode(
@@ -11360,11 +11362,9 @@ def stream_atlas_profile(spark, sf):
     twin: the accumulated profile must equal the all-at-once one for
     ANY micro-batch split — the associativity the mergeable-state
     design guarantees."""
-    import tempfile
-
     from .streaming.ingest import stream_table
 
-    out_dir = tempfile.mkdtemp(prefix="kerf_stream_atlas_")
+    out_dir = _scratch("kerf_stream_atlas_")
 
     def profile(bdf, _epoch):
         AT.schema_profile_partial(
@@ -11841,14 +11841,12 @@ def stream_drawdown(spark, sf):
     oracle as the batch twin: the stateful fold must equal the
     all-at-once window for this time-ordered delivery — the
     feed-handler contract."""
-    import tempfile
-
     from pyspark.sql.types import DoubleType, LongType, StructField, StructType
 
     from .streaming.ingest import read_file_stream, streaming_drawdown
 
     e = _t(spark, sf, "events").select("user_id", "event_id", "ts", "value")
-    src_dir = tempfile.mkdtemp(prefix="kerf_stream_dd_src_")
+    src_dir = _scratch("kerf_stream_dd_src_")
     # three chunks by time range — genuine micro-batches whose arrival
     # order IS time order (ns bounds; ties can't straddle a boundary)
     bounds = [
@@ -11872,7 +11870,7 @@ def stream_drawdown(spark, sf):
         spark, src_dir + "/part*", chunk_schema, maxFilesPerTrigger=1
     )
     out = streaming_drawdown(stream, ["user_id"], "value", ["ts", "event_id"])
-    sink = tempfile.mkdtemp(prefix="kerf_stream_dd_out_")
+    sink = _scratch("kerf_stream_dd_out_")
     q = (
         out.writeStream.outputMode("append")
         .format("parquet")
@@ -12570,29 +12568,8 @@ def rollup_incremental_bars(spark, sf):
 
     ev = _t(spark, sf, "events")
     path = _ann_index_dir(sf, "rollup")
-    # freshness rides the SOURCE FILE BYTES (a stat call, not a
-    # max(ts) scan of events per run — the matview/keyed-workspace
-    # discipline); the watermark check runs only when the bytes
-    # marker is absent (legacy sidecar), i.e. at (re)build time
-    src = _src_bytes(sf, "events")
-    fresh = False
-    try:
-        meta = RU.rollup_meta(path)
-        fresh = (
-            meta.get("src_bytes") == src and len(meta["epochs"]) >= 2
-        )
-        if not fresh and meta.get("src_bytes") is None:
-            mx = ev.agg(F.max("ts")).head()[0]
-            fresh = (
-                meta["watermark_ns"] == int(mx) + 1
-                and len(meta["epochs"]) >= 2
-            )
-            if fresh:  # upgrade the legacy sidecar once
-                meta["src_bytes"] = src
-                RU._write_meta(path, meta)
-    except Exception:
-        fresh = False
-    if not fresh:
+
+    def build():
         split = int(ev.selectExpr("percentile(ts, 0.8) AS p").head()["p"])
         RU.create_rollup(
             ev.where(F.col("ts") < split),
@@ -12603,9 +12580,11 @@ def rollup_incremental_bars(spark, sf):
             width_ns=TM.span_ns(5, "m"),
         )
         RU.refresh_rollup(spark, path, ev)
-        meta = RU.rollup_meta(path)
-        meta["src_bytes"] = src
-        RU._write_meta(path, meta)
+
+    _cached_fixture(
+        path, sf, ["events"], build,
+        lambda: len(RU.rollup_meta(path)["epochs"]) >= 2,
+    )
     # no final orderBy: result-only sort; its sample pass re-read the
     # bars (order-insensitive driver compare)
     return RU.read_rollup(spark, path).select(
@@ -12641,29 +12620,8 @@ def matview_enriched_lineitem(spark, sf):
     )
     pt = _t(spark, sf, "part").select("p_partkey", "p_brand", "p_type")
     path = _ann_index_dir(sf, "matview")
-    # freshness rides the SOURCE FILE BYTES (a stat call, not a
-    # max-scan of lineitem per run — VERDICT r9: probe selection must
-    # not cost table scans); the watermark check runs only when the
-    # bytes marker is absent or stale, i.e. at (re)build time
-    src = _src_bytes(sf, "lineitem")
-    fresh = False
-    try:
-        meta = MV.matview_meta(path)
-        fresh = (
-            meta.get("src_bytes") == src and len(meta["epochs"]) >= 2
-        )
-        if not fresh and meta.get("src_bytes") is None:
-            mx = li.agg(F.max(TM.ts_to_ns("l_shipdate"))).head()[0]
-            fresh = (
-                meta["watermark_ns"] == int(mx) + 1
-                and len(meta["epochs"]) >= 2
-            )
-            if fresh:  # upgrade the legacy sidecar once
-                meta["src_bytes"] = src
-                MV._write_meta(path, meta)
-    except Exception:
-        fresh = False
-    if not fresh:
+
+    def build():
         split = int(
             li.select(TM.ts_to_ns("l_shipdate").alias("t"))
             .selectExpr("percentile(t, 0.7) AS p").head()["p"]
@@ -12680,9 +12638,11 @@ def matview_enriched_lineitem(spark, sf):
             ],
         )
         MV.refresh_enrich_view(spark, path, li)
-        meta = MV.matview_meta(path)
-        meta["src_bytes"] = src
-        MV._write_meta(path, meta)
+
+    _cached_fixture(
+        path, sf, ["lineitem", "part"], build,
+        lambda: len(MV.matview_meta(path)["epochs"]) >= 2,
+    )
     # no final orderBy: the driver's compare is order-insensitive and
     # the global sort's range-partition sample pass re-executed the
     # whole epoch-union read (~0.6M rows at sf0.1 — guide §2.4's
@@ -12731,17 +12691,8 @@ def rollup_backfill_bars(spark, sf):
 
     ev = _t(spark, sf, "events")
     path = _ann_index_dir(sf, "rollupbf")
-    mx = ev.agg(F.max("ts")).head()[0]
-    fresh = False
-    try:
-        meta = RU.rollup_meta(path)
-        fresh = (
-            meta["watermark_ns"] == int(mx) + 1
-            and any(e.get("backfill") for e in meta["epochs"])
-        )
-    except Exception:
-        fresh = False
-    if not fresh:
+
+    def build():
         qs = ev.selectExpr(
             "percentile(ts, 0.4) AS a", "percentile(ts, 0.5) AS b"
         ).head()
@@ -12757,6 +12708,13 @@ def rollup_backfill_bars(spark, sf):
             width_ns=TM.span_ns(5, "m"),
         )
         RU.backfill_rollup(spark, path, late)
+
+    _cached_fixture(
+        path, sf, ["events"], build,
+        lambda: any(
+            e.get("backfill") for e in RU.rollup_meta(path)["epochs"]
+        ),
+    )
     # no final orderBy: result-only sort; its sample pass re-read the
     # bars (order-insensitive driver compare)
     return RU.read_rollup(spark, path).select(
@@ -12799,29 +12757,16 @@ def workspace_rollup_append(spark, sf):
     oracle recomputes every bar from the raw events, so a hook that
     fails to fire, double-folds, or reads a stale attachment is a
     value mismatch."""
-    import os as _os
-
     from .sources import rollup as RU
     from .sources.catalog import Workspace
 
     ev = _t(spark, sf, "events")
     root = _ann_index_dir(sf, "wsrollup")
-    mx = ev.agg(F.max("ts")).head()[0]
-    fresh = False
-    try:
-        ws = Workspace(spark, root)
-        meta = RU.rollup_meta(ws.rollup_path("bars5m"))
-        fresh = (
-            meta["watermark_ns"] == int(mx) + 1
-            and len(meta["epochs"]) >= 2
-        )
-    except Exception:
-        fresh = False
-    if not fresh:
-        import shutil as _sh
 
-        _sh.rmtree(root, ignore_errors=True)
-        _os.makedirs(root, exist_ok=True)
+    def bars_path():
+        return Workspace(spark, root).rollup_path("bars5m")
+
+    def build():
         ws = Workspace(spark, root)
         split = int(ev.selectExpr("percentile(ts, 0.8) AS p").head()["p"])
         ws.save("ticks", ev.where(F.col("ts") < split))
@@ -12830,8 +12775,13 @@ def workspace_rollup_append(spark, sf):
             values=["value"], width_ns=TM.span_ns(5, "m"),
         )
         ws.append("ticks", ev.where(F.col("ts") >= split))
+
+    _cached_fixture(
+        root, sf, ["events"], build,
+        lambda: len(RU.rollup_meta(bars_path())["epochs"]) >= 2,
+    )
     return (
-        RU.read_rollup(spark, ws.rollup_path("bars5m"))
+        RU.read_rollup(spark, bars_path())
         .select(
             "event_type", "bucket_ns", "cnt",
             "value_min", "value_max", "value_open", "value_close",
@@ -13534,9 +13484,7 @@ def _src_bytes(sf, name) -> str:
     metadata (stat calls), no Spark job.  ``"<total_bytes>:<max
     mtime_ns>"``: folding mtime in closes the byte-size false positive
     (VERDICT r13 #1 — a source rewrite that happens to preserve total
-    byte count must still read as stale).  Sidecars stamped by an
-    earlier round hold the bare byte integer, which never equals the
-    composite string, so they rebuild once and upgrade."""
+    byte count must still read as stale)."""
     import os
 
     p = os.path.join(sf, f"{name}.parquet")
@@ -13552,35 +13500,44 @@ def _src_bytes(sf, name) -> str:
     return f"{sizes}:{mt}"
 
 
+def _cached_fixture(root, sf, sources, build, valid) -> None:
+    """Build-or-reuse the cached fixture at ``root`` (an _ann_index_dir).
+
+    It is fresh when its marker file ``<root>.src`` holds the current
+    _src_bytes of every name in ``sources`` (stat calls, no Spark job)
+    and ``valid()``, the row's structural condition, holds.  Otherwise
+    ``root`` is cleared and ``build()`` runs; the marker is written
+    only after the build returns, so an interrupted build rebuilds."""
+    import os
+    import shutil
+
+    marker = root + ".src"
+    src = ";".join(_src_bytes(sf, n) for n in sources)
+    try:
+        with open(marker) as fh:
+            if fh.read() == src and valid():
+                return
+    except (OSError, KeyError, ValueError):  # no marker or sidecar
+        pass
+    if os.path.exists(marker):
+        os.remove(marker)
+    shutil.rmtree(root, ignore_errors=True)
+    build()
+    with open(marker + ".tmp", "w") as fh:
+        fh.write(src)
+    os.replace(marker + ".tmp", marker)
+
+
 def _keyed_orders_ws(spark, sf):
     """Build-or-reuse the keyed orders workspace (shared by the point
     lookup and range scan rows — one sort-index build, two read
-    shapes).  Freshness rides the SOURCE FILE BYTES (a stat call, not
-    a count scan — VERDICT r9 'what's wrong' #1: probe selection must
-    not cost table scans)."""
-    import os
-    import shutil as _sh
-
+    shapes)."""
     from .sources.catalog import Workspace
 
     root = _ann_index_dir(sf, "wskeyed")
-    src = _src_bytes(sf, "orders")
-    fresh = False
-    try:
-        ws = Workspace(spark, root)
-        meta = ws.manifest["tables"]["orders"]
-        fresh = (
-            meta.get("key") == ["o_orderkey"]
-            and meta.get("src_bytes") == src
-            and len(meta.get("key_file_ranges", {})) >= 4
-        )
-    except Exception:
-        fresh = False
-    if not fresh:
-        _sh.rmtree(root, ignore_errors=True)
-        os.makedirs(root, exist_ok=True)
-        ws = Workspace(spark, root)
-        ws.save(
+
+    def build():
+        Workspace(spark, root).save(
             "orders",
             _t(spark, sf, "orders").select(
                 "o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice"
@@ -13588,41 +13545,34 @@ def _keyed_orders_ws(spark, sf):
             key="o_orderkey",
             key_partitions=8,
         )
-        ws.manifest["tables"]["orders"]["src_bytes"] = src  # freshness
-        ws._flush()
-    return ws
+
+    def valid():
+        meta = Workspace(spark, root).manifest["tables"]["orders"]
+        return (
+            meta.get("key") == ["o_orderkey"]
+            and len(meta.get("key_file_ranges", {})) >= 4
+        )
+
+    _cached_fixture(root, sf, ["orders"], build, valid)
+    return Workspace(spark, root)
 
 
 def _cloned_keyed_orders(spark, sf, tag):
     """A PRISTINE keyed-orders workspace for the destructive write
     rows (pruned delete / range delete): the keyed build — range
-    layout + sort index — happens ONCE per fixture generation
-    (freshness by source bytes); each call clones it with a local
-    file copy (milliseconds) and rewrites the manifest's absolute
-    paths, so the timed region measures the WRITE OPERATION itself,
-    not a rebuild of the table it mutates."""
+    layout + sort index — happens ONCE per fixture generation; each
+    call clones it with a local file copy (milliseconds) and rewrites
+    the manifest's absolute paths, so the timed region measures the
+    WRITE OPERATION itself, not a rebuild of the table it mutates."""
     import os
     import shutil as _sh
 
     from .sources.catalog import Workspace
 
     base = _ann_index_dir(sf, "wsmutbase")
-    src = _src_bytes(sf, "orders")
-    fresh = False
-    try:
-        ws = Workspace(spark, base)
-        meta = ws.manifest["tables"]["orders"]
-        fresh = (
-            meta.get("key") == ["o_orderkey"]
-            and meta.get("src_bytes") == src
-        )
-    except Exception:
-        fresh = False
-    if not fresh:
-        _sh.rmtree(base, ignore_errors=True)
-        os.makedirs(base, exist_ok=True)
-        ws = Workspace(spark, base)
-        ws.save(
+
+    def build():
+        Workspace(spark, base).save(
             "orders",
             _t(spark, sf, "orders").select(
                 "o_orderkey", "o_custkey", "o_totalprice"
@@ -13630,8 +13580,12 @@ def _cloned_keyed_orders(spark, sf, tag):
             key="o_orderkey",
             key_partitions=8,
         )
-        ws.manifest["tables"]["orders"]["src_bytes"] = src
-        ws._flush()
+
+    _cached_fixture(
+        base, sf, ["orders"], build,
+        lambda: Workspace(spark, base).manifest["tables"]["orders"]["key"]
+        == ["o_orderkey"],
+    )
     root = _ann_index_dir(sf, tag)
     _sh.rmtree(root, ignore_errors=True)
     # symlinks=True keeps the version POINTER a pointer (the publish
@@ -14531,7 +14485,6 @@ def stream_delete_keys(spark, sf):
     prove per-epoch application; replay converges because deleting an
     absent key is a no-op."""
     import shutil as _sh
-    import tempfile
 
     from .streaming.ingest import fanout, read_file_stream
 
@@ -14546,7 +14499,7 @@ def stream_delete_keys(spark, sf):
     cut = mn + (mx - mn) // 2
     doomed = list(range(((mn + 99) // 100) * 100, cut + 1, 100))
     half = len(doomed) // 2
-    root = tempfile.mkdtemp(prefix="kerf_delfeed_")
+    root = _scratch("kerf_delfeed_")
     try:
         for i, chunk in enumerate((doomed[:half], doomed[half:])):
             spark.createDataFrame(
@@ -14609,7 +14562,6 @@ def stream_upsert_keyed(spark, sf):
     key-pruned merge; the second batch touches a disjoint slice.  The
     final table equals the CASE oracle."""
     import shutil as _sh
-    import tempfile
 
     from .streaming.ingest import fanout, read_file_stream
 
@@ -14644,7 +14596,7 @@ def stream_upsert_keyed(spark, sf):
         F.round(F.col("o_totalprice") + 3000, 2).alias("o_totalprice"),
         F.lit(1).cast("long").alias("ver"),
     )
-    root = tempfile.mkdtemp(prefix="kerf_upsfeed_")
+    root = _scratch("kerf_upsfeed_")
     try:
         part0.coalesce(1).write.mode("overwrite").parquet(f"{root}/src/part0")
         part1.coalesce(1).write.mode("overwrite").parquet(f"{root}/src/part1")
@@ -14736,33 +14688,19 @@ def keyed_tuple_lookup(spark, sf):
     selects strictly fewer files than a lead-only probe when one hot
     lead spans several files (plan proof in tests).  Probes: the
     (first type, its lowest id) and (last type, its highest id)."""
-    import os
-    import shutil as _sh
-
     from .sources.catalog import Workspace
 
     root = _ann_index_dir(sf, "wstuple")
-    src = _src_bytes(sf, "events")
-    fresh = False
-    try:
-        ws = Workspace(spark, root)
-        meta = ws.manifest["tables"]["events"]
-        fresh = (
-            meta.get("key") == ["event_type", "event_id"]
-            and meta.get("src_bytes") == src
-        )
-    except Exception:
-        fresh = False
     ev = _t(spark, sf, "events").select("event_type", "event_id", "value")
-    if not fresh:
-        _sh.rmtree(root, ignore_errors=True)
-        os.makedirs(root, exist_ok=True)
-        ws = Workspace(spark, root)
-        ws.save(
+    _cached_fixture(
+        root, sf, ["events"],
+        lambda: Workspace(spark, root).save(
             "events", ev, key=("event_type", "event_id"), key_partitions=8
-        )
-        ws.manifest["tables"]["events"]["src_bytes"] = src
-        ws._flush()
+        ),
+        lambda: Workspace(spark, root).manifest["tables"]["events"]["key"]
+        == ["event_type", "event_id"],
+    )
+    ws = Workspace(spark, root)
     # ONE probe-selection job, not four: the lexicographic struct
     # min/max IS (min type, min id within it) / (max type, max id
     # within it) — both key columns are non-null in the keyed save,
@@ -14817,27 +14755,16 @@ def workspace_rollup_late_append(spark, sf):
     exactly once.  The oracle recomputes every bar from the raw
     events, so a dropped straggler, a double-folded tail row, or a
     backfill that leaked at/after the watermark is a value mismatch."""
-    import os
-    import shutil as _sh
-
     from .sources import rollup as RU
     from .sources.catalog import Workspace
 
     ev = _t(spark, sf, "events")
     root = _ann_index_dir(sf, "wslateroll")
-    mx = ev.agg(F.max("ts")).head()[0]
-    fresh = False
-    try:
-        ws = Workspace(spark, root)
-        meta = RU.rollup_meta(ws.rollup_path("bars5m"))
-        fresh = meta["watermark_ns"] == int(mx) + 1 and any(
-            e.get("backfill") for e in meta["epochs"]
-        )
-    except Exception:
-        fresh = False
-    if not fresh:
-        _sh.rmtree(root, ignore_errors=True)
-        os.makedirs(root, exist_ok=True)
+
+    def bars_path():
+        return Workspace(spark, root).rollup_path("bars5m")
+
+    def build():
         ws = Workspace(spark, root)
         q = ev.selectExpr(
             "percentile(ts, 0.4) a", "percentile(ts, 0.7) b",
@@ -14860,8 +14787,15 @@ def workspace_rollup_late_append(spark, sf):
                 | (F.col("ts") >= c)
             ),
         )
+
+    _cached_fixture(
+        root, sf, ["events"], build,
+        lambda: any(
+            e.get("backfill") for e in RU.rollup_meta(bars_path())["epochs"]
+        ),
+    )
     return (
-        RU.read_rollup(spark, ws.rollup_path("bars5m"))
+        RU.read_rollup(spark, bars_path())
         .select(
             "event_type", "bucket_ns", "cnt",
             "value_min", "value_max", "value_open", "value_close",
@@ -14919,30 +14853,8 @@ def rollup_quantile_bars(spark, sf):
 
     ev = _t(spark, sf, "events")
     path = _ann_index_dir(sf, "rolluphist")
-    # freshness by source bytes (stat call), watermark check only on
-    # legacy sidecars — same discipline as rollup_incremental_bars
-    src = _src_bytes(sf, "events")
-    fresh = False
-    try:
-        meta = RU.rollup_meta(path)
-        fresh = (
-            meta.get("src_bytes") == src
-            and len(meta["epochs"]) >= 2
-            and meta.get("hist") is not None
-        )
-        if not fresh and meta.get("src_bytes") is None:
-            mx = ev.agg(F.max("ts")).head()[0]
-            fresh = (
-                meta["watermark_ns"] == int(mx) + 1
-                and len(meta["epochs"]) >= 2
-                and meta.get("hist") is not None
-            )
-            if fresh:  # upgrade the legacy sidecar once
-                meta["src_bytes"] = src
-                RU._write_meta(path, meta)
-    except Exception:
-        fresh = False
-    if not fresh:
+
+    def build():
         split = int(ev.selectExpr("percentile(ts, 0.8) AS p").head()["p"])
         RU.create_rollup(
             ev.where(F.col("ts") < split),
@@ -14954,9 +14866,12 @@ def rollup_quantile_bars(spark, sf):
             hist={"col": "value", "lo": 0.0, "hi": 1000.0, "n_bins": 64},
         )
         RU.refresh_rollup(spark, path, ev)
+
+    def valid():
         meta = RU.rollup_meta(path)
-        meta["src_bytes"] = src
-        RU._write_meta(path, meta)
+        return len(meta["epochs"]) >= 2 and meta.get("hist") is not None
+
+    _cached_fixture(path, sf, ["events"], build, valid)
     # no final orderBy: result-only sort (order-insensitive compare)
     return RU.rollup_quantile(spark, path, 0.5, out="q50")
 
@@ -14996,24 +14911,14 @@ def rollup_stream_bars(spark, sf):
     rollup must equal the batch-built one EXACTLY — the oracle is the
     same full recompute from raw events as rollup_incremental_bars."""
     import shutil
-    import tempfile
 
     from .sources import rollup as RU
     from .streaming.ingest import fanout, read_file_stream
 
     ev = _t(spark, sf, "events")
     path = _ann_index_dir(sf, "rollupstream")
-    mx = ev.agg(F.max("ts")).head()[0]
-    fresh = False
-    try:
-        meta = RU.rollup_meta(path)
-        fresh = (
-            meta["watermark_ns"] == int(mx) + 1
-            and len(meta["epochs"]) >= 3
-        )
-    except Exception:
-        fresh = False
-    if not fresh:
+
+    def build():
         qs = ev.selectExpr(
             "percentile(ts, 0.6) AS a", "percentile(ts, 0.8) AS b"
         ).head()
@@ -15026,7 +14931,7 @@ def rollup_stream_bars(spark, sf):
             values=["value"],
             width_ns=TM.span_ns(5, "m"),
         )
-        root = tempfile.mkdtemp(prefix="kerf_rollupstream_")
+        root = _scratch("kerf_rollupstream_")
         # two time-ordered source files -> two genuine epochs, written
         # oldest-first so the file stream delivers them in time order
         # (the sink's watermark contract)
@@ -15047,6 +14952,11 @@ def rollup_stream_bars(spark, sf):
         )
         q.awaitTermination()
         shutil.rmtree(root, ignore_errors=True)
+
+    _cached_fixture(
+        path, sf, ["events"], build,
+        lambda: len(RU.rollup_meta(path)["epochs"]) >= 3,
+    )
     # no final orderBy: result-only sort; its sample pass re-read the
     # bars (order-insensitive driver compare)
     return RU.read_rollup(spark, path).select(
@@ -15059,504 +14969,15 @@ def rollup_stream_bars(spark, sf):
 # Registry ordering for the driver sweep
 # =====================================================================
 # The driver evaluates exactly the first 50 dict entries of QUERIES per
-# round, so insertion order IS driver coverage order.  Each round the
-# window holds: entries that must be (re-)proven this round, then the
-# highest-information never-checked entries.  Entries with a green
-# driver row already park at the back.  Round 4 closes the book: the
-# 48 never-driver-checked entries + session_windows (r3 hash-red,
-# oracle-type artifact fixed above) = 49 ≤ 50 all fit one window.
+# round, so insertion order IS driver coverage order: the window below,
+# then every other row in definition order.  The window holds the rows
+# whose results the last change could touch, then the rows checked
+# longest ago; `python tools/driver_window.py` lists every row by the
+# last round that checked it (from CORRECTNESS_r*.json), oldest first.
 
-#: Cumulative names with a green (or by-design rows-only) driver row.
-_DRIVER_GREEN = [
-    # r01 (minus the five stale-green ts rows and vwap_bars, re-proving)
-    "q1_pricing_summary", "q3_shipping_priority", "q5_local_supplier",
-    "q6_revenue_forecast", "q10_returned_items", "filter_project",
-    "sql_update", "sql_delete", "insert_append", "upsert_keyed",
-    "distinct_flags", "count_distinct_parts", "top_k_orders",
-    "union_distinct_keys", "intersect_keys", "except_keys",
-    "ungroup_vector_by", "join_inner", "join_left", "join_semi",
-    "join_anti", "join_cross", "dict_decode", "running_sum_unfold",
-    "deltas_mapback", "ratios_mapback", "moving_avg", "running_min_max",
-    "grade_rank", "lead_lag_shift", "string_funcs", "date_parts",
-    "cond_case_null", "cast_types", "json_extract", "array_funcs",
-    "range_til", "kerfsql_select_by", "exact_dedup_docs",
-    "token_count_docs", "quality_score_docs",
-    # r02 green (hash_match); the xxhash64 rows-only fast paths were
-    # retired from the registry in r05 (bench-only callables now)
-    "group_vector_by", "math_funcs",
-    "minhash_portable_pairs",
-    "simhash_portable_pairs", "ngram_jaccard_pairs", "dup_clusters_docs",
-    "lsh_ann_topk_oracle",
-    "ivf_ann_topk_oracle", "cosine_topk_exact", "cosine_neardup_pairs",
-    "multimodal_meta", "multimodal_features", "lang_id_docs",
-    "fingerprint_docs", "hash_sample_docs", "train_val_test_split",
-    "salted_agg_hotkey", "salted_join_hotkey", "q2_min_cost_supplier",
-    "q4_order_priority", "q7_volume_shipping", "q8_market_share",
-    "q9_product_profit", "q11_important_values",
-    "q13_customer_distribution", "q14_promo_revenue", "q15_top_supplier",
-    "q16_supplier_cnt", "q17_small_quantity_revenue", "q18_large_orders",
-    "q19_disjunctive", "q20_potential_promotion", "q21_waiting_supplier",
-    "q22_global_sales_opportunity", "ema_smoother", "kerfsql_update_agg",
-    "kerf_lang_pipeline", "kerf_lang_script", "kerf_lang_chain",
-    # r03 green (all of _R03_WINDOW except session_windows, which
-    # hash-red on a DuckDB-HUGEINT oracle type artifact and re-proves
-    # in the r04 window with the CAST fix)
-    "ffill_quotes", "xbar_5min_bars", "vwap_bars",
-    "asof_join_latest_order", "interval_join_bursts", "ns_time_parts",
-    "differ_runs", "asof_merge_latest_order", "asof_forward_next_purchase",
-    "ema_exact", "kerfsql_tick_idioms", "kerf_lang_temporal",
-    "q12_shipmode_classes",
-    "stream_window_counts", "stream_dedup_batch", "stream_ema",
-    "stream_session_windows", "stream_static_enrich",
-    "stream_stream_join_batch",
-    "folio_partition_prune", "span_arithmetic",
-    "workspace_roundtrip", "bucketed_join_colocated",
-    "narrow_width_roundtrip", "csv_roundtrip", "json_roundtrip",
-    "index_gather", "find_first", "amend_point", "delete_point",
-    "rollup_agg", "cube_agg", "stats_agg",
-    "resample_1h_ffill", "twap_by_user", "ohlc_bars", "interp_resample",
-    "moving_median", "asof_tolerance_join",
-    "funnel_conversion", "cohort_retention",
-    "topk_per_group", "multimodal_real_decode", "pivot_returnflag",
-    "percentile_prices", "weighted_median_price",
-    "mapinpandas_scale", "kerf_lang_recursion", "kerf_lang_table_literal",
-    # r04 green (all of _R04_WINDOW except the four representation-bug
-    # reds, which re-prove in the r05 window with serialized outputs)
-    "session_windows", "multimodal_audio_decode", "take_cyclic",
-    "hash_funcs", "flip_matrix", "fold_generic",
-    "applyinpandas_zscore", "regex_format_funcs",
-    "limit_offset", "lsh_hot_bucket_report", "atlas_json_struct",
-    "union_uneven_schemas", "unpivot_melt", "argminmax_agg",
-    "corr_regr_agg", "skew_kurt_moments", "histogram_bins",
-    "tfidf_top_terms", "levenshtein_pairs", "stratified_sample_docs",
-    "approx_distinct_tolerance", "repetition_signals_docs",
-    "corpus_curation_pipeline",
-    "lsh_neardup_pairs", "contamination_check_docs", "segment_dedup_docs",
-    "pii_scrub_docs", "vocab_zipf_stats", "winsorized_stats",
-    "ntile_buckets", "kmeans_assign_embeddings", "spearman_rank_corr",
-    "chi_square_independence", "approx_quantile_tolerance",
-    "multimodal_framesample", "rank_percentiles", "sequence_packing",
-    "corpus_mixture_rebalance", "script_detect_docs",
-    "corpus_shuffle_order", "stream_static_asof",
-    "interval_overlap_pairs", "chunk_documents", "key_skew_profile",
-    "asof_bucketed_colocated", "multimodal_jpeg_decode",
-    # r05 green (all of _R05_WINDOW except bpe_pair_counts and
-    # merge_event_intervals, the two HUGEINT-oracle-dtype reds that
-    # re-prove in the r06 window with CAST fixes)
-    "map_funcs", "flip_transpose", "bigint_decimal",
-    "rolling_window_stats",
-    "quality_classifier_docs", "bigram_lm_quality",
-    "dsir_weights_docs", "dsir_select_docs",
-    "bpe_merges_learned", "bpe_encode_docs",
-    "substring_dedup_spans",
-    "multimodal_gif_decode", "multimodal_video_decode",
-    "multimodal_audio_features",
-    "leakage_safe_split",
-    "incremental_neardup_pairs", "incremental_new_docs",
-    "stream_incremental_dedup",
-    "semantic_dedup_pairs", "semantic_dedup_survivors",
-    "quantize_embeddings", "pca_project_embeddings",
-    "stream_windowed_hll",
-    "percentile_disc_cont",
-    "scd2_user_state_history", "scd2_apply_batch", "stream_scd2_history",
-    "validate_events_audit", "validate_referential_orphans",
-    "hll_overlap_event_types",
-    "zorder_locality",
-    "kerfsql_running_verbs",
-    "event_gap_analysis",
-    "kerf_lang_asof_verb", "kerfsql_window_join", "kerfsql_asof_join",
-    "bloom_semi_join_lineitems", "cms_heavy_hitters",
-    "hll_distinct_users", "stream_hll_users",
-    "pagerank_supplier_nations",
-    "grouping_sets_agg", "asof_nearest_join",
-    "bloom_contamination_docs", "inverted_index_terms",
-    "rendezvous_shard_assign", "autocorr_lag_events",
-    "robust_zscore_events",
-    # r06 green (all of _R06_WINDOW — 50/50, the first perfect round)
-    "bpe_pair_counts", "merge_event_intervals",
-    "global_running_sum", "volume_bars_events", "tick_rule_flow",
-    "stream_socket_ingest", "compact_roundtrip", "dup_cluster_best_docs",
-    "pq_encode_codes", "pq_ann_topk", "pq_rerank_topk",
-    "kerfsql_fby_filter",
-    "atlas_nested_update", "atlas_drift_append", "atlas_schema_profile",
-    "stream_atlas_profile",
-    "rand_det_uniform", "weighted_sample_docs",
-    "drawdown_events", "stream_drawdown",
-    "bollinger_bands_events", "realized_vol_events",
-    "rsi_events", "stochastic_events", "macd_events",
-    "ngram_novelty_docs", "global_moving_avg", "containment_pairs_docs",
-    "ivfpq_ann_topk", "ann_recall_meter",
-    "radius_neighbors_embeddings", "atlas_collection_find",
-    # r07 green (all of _R07_WINDOW — 50/50; these are the first-time
-    # greens, the rest of that window were re-proves already listed)
-    "ewma_user_value", "rand_pcg_uniform", "stream_fanout_sinks",
-    "kerf_lang_protected_eval", "fp16_embeddings_roundtrip",
-    "ivf_indexed_topk", "pq_indexed_topk", "ivfpq_indexed_topk",
-    "ivf_append_topk", "ivf_stream_append_topk",
-    "text_index_search", "bm25_topk_docs", "phrase_search_docs",
-    "bm25_append_topk", "hist_quantile_events", "ppjoin_exact_pairs",
-    # r08 green (all of _R08_WINDOW — 50/50; first-time greens only,
-    # the backfill half were re-proves already listed above)
-    "ppjoin_survivors", "bm25_stream_append_topk", "knn_label_vote",
-    "text_index_search_any", "hist_quantile_merged",
-    "workspace_tree_roundtrip", "ivf_delete_topk", "bm25_delete_topk",
-    "kerf_lang_verb_breadth", "near_search_docs", "ppjoin_capped_audit",
-    "rollup_incremental_bars", "ivf_upsert_topk", "bm25_upsert_topk",
-    "kerf_lang_uniform_verbs", "kerf_lang_set_verbs",
-    "rollup_stream_bars", "rollup_quantile_bars",
-    "matview_enriched_lineitem", "workspace_rollup_append",
-    "rollup_backfill_bars",
-    # r09 green (all of _R09_WINDOW — 50/50; first-time greens only,
-    # the re-proves were already listed above)
-    "workspace_rollup_late_append", "keyed_point_lookup",
-    "kerf_lang_amend_group_verbs", "folio_remote_scatter",
-    "ivf_stream_upsert_topk", "keyed_range_scan",
-    # r10 green (all of _R10_WINDOW — 50/50; first-time greens only)
-    "upsert_keyed_pruned", "delete_keyed_pruned", "delete_keyed_range",
-    "stream_delete_keys", "stream_upsert_keyed",
-    "workspace_snapshot_read", "keyed_tuple_lookup", "keyed_tuple_range",
-    "folio_remote_avg", "folio_remote_median", "folio_remote_hll",
-    "folio_remote_bucket", "kerf_lang_join_verbs",
-    "kerf_lang_ungroup_verb", "kerf_lang_running_verbs",
-    # r11 green (all of _R11_WINDOW — 50/50; first-time greens only)
-    "folio_remote_last", "kerfsql_delete_pruned",
-    "workspace_txn_rollback", "folio_remote_join", "folio_remote_kll",
-    "theta_diff_users",
-    # r12 green (all of _R12_WINDOW — 50/50; first-time greens only)
-    "folio_remote_mode", "folio_reshard_join", "kerfsql_txn_rollback",
-]
-
-#: Round-7 driver window (exactly 50 = the driver's per-round budget):
-#: ewma_user_value first (the ONLY registry entry never driver-checked
-#: — parked at position 51 all of r6), the three round-7 additions
-#: (PCG64 stream-parity RNG, feed fanout, protected eval), re-proves
-#: of every query whose PLAN changed this round (the small-corpus
-#: single-window top-k fallback + ivfpq zero-norm guard + freshness
-#: key fix touch the whole top-k family; the _quote control-range fix
-#: touches the ATLAS write path), and a spread of parked greens.
-_R07_WINDOW = [
-    # never driver-checked (late r6 addition, queued at position 51)
-    "ewma_user_value",
-    # round-7 additions
-    "rand_pcg_uniform", "stream_fanout_sinks", "kerf_lang_protected_eval",
-    "fp16_embeddings_roundtrip",
-    # plan changed this round: top-k family (two_phase_topk fallback,
-    # ivfpq guarded cosine re-rank, _input_freshness URI fix)
-    "cosine_topk_exact", "ivf_ann_topk_oracle", "lsh_ann_topk_oracle",
-    "pq_ann_topk", "pq_rerank_topk", "ivfpq_ann_topk",
-    "ann_recall_meter", "radius_neighbors_embeddings",
-    # round-7 late additions: persisted ANN indexes (build-once/query-
-    # many; partition-pruned IVF probe, durable PQ codes) — displace
-    # two r4-green re-proves (hash_funcs, union_uneven_schemas)
-    "ivf_indexed_topk", "pq_indexed_topk",
-    # + the composed persisted index, the frozen-quantizer append
-    # proof, and the streaming-delta + compaction proof (displace r4
-    # parked greens: cohort_retention, sequence_packing,
-    # funnel_conversion)
-    "ivfpq_indexed_topk", "ivf_append_topk", "ivf_stream_append_topk",
-    # + the persisted inverted text index (boolean + BM25 + positional
-    # phrase retrieval; displace r3/r5-green re-proves ema_exact,
-    # ohlc_bars, topk_per_group)
-    "text_index_search", "bm25_topk_docs", "phrase_search_docs",
-    "bm25_append_topk",
-    # + the fourth mergeable sketch: histogram quantiles (displaces
-    # r3-green re-prove stats_agg)
-    "hist_quantile_events",
-    # + exact prefix-filtered set-similarity join (displaces r3-green
-    # re-prove differ_runs)
-    "ppjoin_exact_pairs",
-    # plan changed: ATLAS write path (_quote full control-range escape)
-    "atlas_nested_update", "atlas_drift_append", "atlas_schema_profile",
-    "stream_atlas_profile", "atlas_collection_find", "atlas_json_struct",
-    # representative parked greens re-proving under the strict sweep
-    # (TPC-H relational core not re-proven since r2)
-    "q2_min_cost_supplier", "q4_order_priority", "q7_volume_shipping",
-    "q8_market_share", "q9_product_profit", "q12_shipmode_classes",
-    "q13_customer_distribution", "q14_promo_revenue", "q15_top_supplier",
-    "q16_supplier_cnt", "q17_small_quantity_revenue", "q18_large_orders",
-    "q19_disjunctive", "q20_potential_promotion", "q21_waiting_supplier",
-    "q22_global_sales_opportunity",
-    # window/ordered analytics + temporal spread
-    "moving_avg", "grade_rank", "lead_lag_shift", "ffill_quotes",
-]
-
-
-#: Round-8 driver window (exactly 50): the five round-7 additions that
-#: were queued at positions 51+ (never driver-checked — rotation debt,
-#: VERDICT r7 "Next round" #1) go FIRST, followed by the new round-8
-#: rows as they land, then backfill with the longest-unchecked parked
-#: greens (the r1-era relational core hasn't been re-proven since r1/r2).
-_R08_WINDOW = [
-    # never driver-checked (queued behind the r7 window)
-    "ppjoin_survivors", "bm25_stream_append_topk", "knn_label_vote",
-    "text_index_search_any", "hist_quantile_merged",
-    # round-8 additions
-    "workspace_tree_roundtrip", "ivf_delete_topk", "bm25_delete_topk",
-    "kerf_lang_verb_breadth", "near_search_docs", "ppjoin_capped_audit",
-    "rollup_incremental_bars", "ivf_upsert_topk", "bm25_upsert_topk",
-    "kerf_lang_uniform_verbs", "kerf_lang_set_verbs",
-    "rollup_stream_bars", "rollup_quantile_bars",
-    "matview_enriched_lineitem", "workspace_rollup_append",
-    "rollup_backfill_bars",
-    # longest-unchecked parked greens: r1-era relational + scalar core
-    "q1_pricing_summary", "q3_shipping_priority", "q5_local_supplier",
-    "q6_revenue_forecast", "q10_returned_items", "filter_project",
-    "sql_update", "sql_delete", "insert_append", "upsert_keyed",
-    "distinct_flags", "count_distinct_parts", "top_k_orders",
-    "union_distinct_keys", "intersect_keys", "except_keys",
-    "ungroup_vector_by", "join_inner", "join_left", "join_semi",
-    "join_anti", "join_cross", "dict_decode", "running_sum_unfold",
-    "deltas_mapback", "ratios_mapback", "running_min_max",
-    "string_funcs", "date_parts", "cond_case_null", "cast_types",
-    "json_extract", "array_funcs", "range_til", "kerfsql_select_by",
-    "exact_dedup_docs", "token_count_docs", "quality_score_docs",
-    "group_vector_by", "math_funcs", "minhash_portable_pairs",
-    "simhash_portable_pairs", "ngram_jaccard_pairs", "dup_clusters_docs",
-    "cosine_neardup_pairs",
-]
-# The list deliberately overshoots 50: planned round-8 rows sit before
-# the green backfill, and _reorder_registry truncates to the driver's
-# 50-entry budget — as new rows land they displace tail greens (which
-# simply return to parked-green status).
-
-
-#: Round-9 driver window (exactly 50): the four round-9 additions go
-#: FIRST (never driver-checked), then every row whose PLAN or on-disk
-#: FORMAT changed this round — the rollup family (partials carry
-#: {v}_cnt, FORMAT 2), the matview (partition-granular compaction),
-#: the persisted-index mutation rows (size-guarded tombstone
-#: broadcast, upsert intent markers, stream-append gen re-base), the
-#: ppjoin audit (persist change), and the workspace rows (sort-index
-#: plumbing in save/append/upsert) — then the STALEST parked greens:
-#: the 9 rows last green in r1 and the ~20 last green in r2 (the
-#: rotation-by-staleness plan from VERDICT r8 next #8).
-_R09_WINDOW = [
-    # round-9 additions (never driver-checked)
-    "workspace_rollup_late_append", "keyed_point_lookup",
-    "kerf_lang_amend_group_verbs", "folio_remote_scatter",
-    "ivf_stream_upsert_topk", "keyed_range_scan",
-    # plan/format changed this round: rollup FORMAT 2 + auto-backfill
-    "rollup_incremental_bars", "rollup_quantile_bars",
-    "rollup_stream_bars", "rollup_backfill_bars",
-    "workspace_rollup_append", "matview_enriched_lineitem",
-    # index mutation paths (broadcast guard, markers, re-base)
-    "ivf_delete_topk", "bm25_delete_topk", "ivf_upsert_topk",
-    "bm25_upsert_topk", "ivf_append_topk", "ivf_stream_append_topk",
-    "bm25_append_topk", "bm25_stream_append_topk", "ppjoin_capped_audit",
-    # workspace write paths (key plumbing touches save/append/upsert)
-    "workspace_roundtrip", "workspace_tree_roundtrip", "insert_append",
-    "upsert_keyed",
-    # stalest parked greens: last green r1
-    "cond_case_null", "cast_types", "json_extract", "array_funcs",
-    "range_til", "kerfsql_select_by", "exact_dedup_docs",
-    "token_count_docs", "quality_score_docs",
-    # stalest parked greens: last green r2
-    "group_vector_by", "math_funcs", "minhash_portable_pairs",
-    "simhash_portable_pairs", "ngram_jaccard_pairs", "dup_clusters_docs",
-    "cosine_neardup_pairs", "multimodal_meta", "multimodal_features",
-    "lang_id_docs", "fingerprint_docs", "hash_sample_docs",
-    "train_val_test_split", "salted_agg_hotkey", "salted_join_hotkey",
-    "q11_important_values", "ema_smoother", "kerfsql_update_agg",
-    "kerf_lang_pipeline", "kerf_lang_script", "kerf_lang_chain",
-]
-# overshoots 50 on purpose: _reorder_registry truncates, and late r9
-# additions displace tail re-proves back to parked-green status.
-
-#: Round-10 driver window: the five round-10 additions (key-pruned
-#: upsert, composite-key tuple lookup, folio aggregate auto-split,
-#: q join-verb batch, ungroup), re-proves of every row whose PLAN
-#: changed this round (null-safe upsert merge touches upsert_keyed;
-#: the stored-increment backfill + flock + composite ranges touch the
-#: workspace write paths; manifest-derived probes touch the keyed
-#: lookups; the upload-framing and folio changes touch the server
-#: row; amend negative-index/conformance touches the amend row), then
-#: the STALENESS backlog: the five rows last green in r2 and the
-#: oldest r3 cohort.
-_R10_WINDOW = [
-    # round-10 additions (never driver-checked)
-    "upsert_keyed_pruned", "delete_keyed_pruned", "delete_keyed_range",
-    "stream_delete_keys", "stream_upsert_keyed",
-    "workspace_snapshot_read", "keyed_tuple_lookup",
-    "keyed_tuple_range", "folio_remote_avg", "folio_remote_median",
-    "folio_remote_hll", "folio_remote_bucket",
-    "kerf_lang_join_verbs", "kerf_lang_ungroup_verb",
-    "kerf_lang_running_verbs",
-    # plan changed this round: write/merge/lookup/server/amend paths
-    "upsert_keyed", "keyed_point_lookup", "keyed_range_scan",
-    "folio_remote_scatter", "workspace_roundtrip",
-    "workspace_tree_roundtrip", "insert_append",
-    "workspace_rollup_append", "workspace_rollup_late_append",
-    "matview_enriched_lineitem", "kerf_lang_amend_group_verbs",
-    # stalest parked greens: last green r2
-    "kerf_lang_pipeline", "kerf_lang_script", "kerfsql_update_agg",
-    "ema_smoother", "kerf_lang_chain",
-    # stalest parked greens: last green r3 (oldest cohort)
-    "cube_agg", "ns_time_parts", "folio_partition_prune",
-    "topk_per_group", "amend_point", "kerf_lang_temporal",
-    "stream_window_counts", "kerf_lang_recursion", "cohort_retention",
-    "delete_point", "rollup_agg", "stream_stream_join_batch",
-    "interp_resample", "json_roundtrip", "resample_1h_ffill",
-    "ema_exact", "asof_merge_latest_order", "span_arithmetic",
-    "pivot_returnflag", "mapinpandas_scale", "stream_static_enrich",
-    "multimodal_real_decode", "funnel_conversion",
-    "bucketed_join_colocated", "differ_runs", "asof_tolerance_join",
-    "find_first", "asof_forward_next_purchase", "twap_by_user",
-    "ohlc_bars", "weighted_median_price", "stream_ema", "index_gather",
-]
-# overshoots 50 on purpose: _reorder_registry truncates, keeping the
-# truncated tail parked-green for the next rotation.
-
-#: Round-11 driver window (exactly 50), rotation-by-staleness as the
-#: r10 verdict directed (next #6): the three round-11 additions go
-#: FIRST (never driver-checked), then the ENTIRE r3-stale cohort (23
-#: rows, last driver-proven in round 3 — seven rounds of churn since),
-#: then the oldest r4 cohort fills to 50.  The rows whose PLAN changed
-#: this round (folio_select aggregates, every workspace write path,
-#: kerfsql) are NOT re-queued here — they were all value-checked
-#: locally against the same DuckDB oracles before commit
-#: (tests/oracle_check.py + the per-row drives recorded in the round
-#: log), trading driver re-proof slots for staleness clearance.
-_R11_WINDOW = [
-    # round-11 additions (never driver-checked)
-    "folio_remote_last", "kerfsql_delete_pruned",
-    "workspace_txn_rollback", "folio_remote_join", "folio_remote_kll",
-    "theta_diff_users",
-    # the r3-stale cohort, cleared in full
-    "asof_forward_next_purchase", "asof_tolerance_join",
-    "bucketed_join_colocated", "csv_roundtrip", "differ_runs",
-    "find_first", "funnel_conversion", "index_gather",
-    "kerf_lang_table_literal", "mapinpandas_scale", "moving_median",
-    "multimodal_real_decode", "narrow_width_roundtrip", "ohlc_bars",
-    "percentile_prices", "stats_agg", "stream_dedup_batch",
-    "stream_ema", "stream_session_windows", "stream_static_enrich",
-    "twap_by_user", "vwap_bars", "weighted_median_price",
-    # oldest r4 cohort (44 rows are r4-stale; these fill to 50, the
-    # rest queue for r12)
-    "multimodal_audio_decode", "take_cyclic", "hash_funcs",
-    "flip_matrix", "fold_generic", "applyinpandas_zscore",
-    "regex_format_funcs", "limit_offset", "lsh_hot_bucket_report",
-    "union_uneven_schemas", "unpivot_melt", "argminmax_agg",
-    "corr_regr_agg", "skew_kurt_moments", "histogram_bins",
-    "tfidf_top_terms", "levenshtein_pairs", "stratified_sample_docs",
-    "approx_distinct_tolerance", "repetition_signals_docs",
-    "corpus_curation_pipeline", "lsh_neardup_pairs",
-    "contamination_check_docs", "segment_dedup_docs",
-    "pii_scrub_docs", "vocab_zipf_stats",
-]
-# overshoots 50 on purpose: _reorder_registry truncates, keeping the
-# truncated tail parked-green for the next rotation.
-
-#: Round-12 driver window (r11 verdict next #3): the three round-12
-#: additions go FIRST (never driver-checked), then the ENTIRE
-#: r4-stale cohort (23 rows, last driver-proven in round 4 — eight
-#: rounds of churn since), then the oldest r5 cohort fills to 50.
-#: Rows whose PLAN changed this round (the folio_select fusion, the
-#: fused delete counts, every workspace write path under the epoch
-#: publish) are NOT re-queued here — each was value-checked locally
-#: against the same DuckDB oracles before its commit
-#: (tests/oracle_check.py runs recorded in the round log), trading
-#: driver re-proof slots for staleness clearance, the same policy the
-#: r11 rotation followed.
-_R12_WINDOW = [
-    # round-12 additions (never driver-checked)
-    "folio_remote_mode", "folio_reshard_join", "kerfsql_txn_rollback",
-    # the r4-stale cohort, cleared in full
-    "approx_quantile_tolerance", "asof_bucketed_colocated",
-    "chi_square_independence", "chunk_documents",
-    "contamination_check_docs", "corpus_mixture_rebalance",
-    "corpus_shuffle_order", "interval_overlap_pairs",
-    "key_skew_profile", "kmeans_assign_embeddings",
-    "lsh_neardup_pairs", "multimodal_framesample",
-    "multimodal_jpeg_decode", "ntile_buckets", "pii_scrub_docs",
-    "rank_percentiles", "script_detect_docs", "segment_dedup_docs",
-    "sequence_packing", "spearman_rank_corr", "stream_static_asof",
-    "vocab_zipf_stats", "winsorized_stats",
-    # oldest r5 cohort (44 rows are r5-stale; these fill to 50, the
-    # rest queue for r13)
-    "asof_nearest_join", "autocorr_lag_events", "bigram_lm_quality",
-    "bloom_semi_join_lineitems", "bpe_encode_docs",
-    "bpe_merges_learned", "cms_heavy_hitters", "dsir_select_docs",
-    "dsir_weights_docs", "event_gap_analysis", "flip_transpose",
-    "grouping_sets_agg", "hll_distinct_users",
-    "hll_overlap_event_types", "incremental_neardup_pairs",
-    "incremental_new_docs", "inverted_index_terms",
-    "kerf_lang_asof_verb", "kerfsql_asof_join",
-    "kerfsql_running_verbs", "kerfsql_window_join",
-    "leakage_safe_split", "multimodal_audio_features",
-    "multimodal_gif_decode", "multimodal_video_decode",
-    "pagerank_supplier_nations", "pca_project_embeddings",
-    "percentile_disc_cont",
-    # r13 green (CORRECTNESS_r13 — 50/50; these 7 are the rows not
-    # already green from an earlier round, folded in by r14 since the
-    # r13 driver pass ran after the r13 builder's last commit)
-    "folio_window_ma", "folio_asof_cosharded", "kerfsql_over_window",
-    "folio_topk_orders", "kerfsql_qualify_topn", "folio_heavy_hitters",
-    "folio_remote_distinct",
-]
-# overshoots 50 on purpose: _reorder_registry truncates, keeping the
-# truncated tail parked-green for the next rotation.
-
-
-#: Round-13 driver window (VERDICT r12 next #3 — clear the remaining
-#: staleness debt): the round-13 addition and the one never-driver-
-#: checked row go first, then validate_referential_orphans (its
-#: oracle grew synthetic-orphan teeth this round — a changed row,
-#: not just a stale one), then the ENTIRE leftover r5-green cohort
-#: (19 more rows, 7 rounds stale), then the oldest r6 greens filling
-#: to 50.  Rows whose PLAN changed this round (the p2p reshard, the
-#: in-txn append staging, every folio_select statement) were
-#: value-checked locally against the same DuckDB oracles before
-#: their commits — the same slot-trading policy r11/r12 followed.
-_R13_WINDOW = [
-    # round-13 additions + never driver-checked
-    "folio_window_ma", "folio_asof_cosharded", "kerfsql_over_window",
-    "folio_topk_orders", "kerfsql_qualify_topn",
-    "folio_heavy_hitters", "folio_remote_distinct",
-    # changed this round: synthetic-orphan teeth in query AND oracle
-    "validate_referential_orphans",
-    # the leftover r5-green cohort, cleared in full
-    "multimodal_video_decode", "pagerank_supplier_nations",
-    "pca_project_embeddings", "percentile_disc_cont",
-    "quality_classifier_docs", "quantize_embeddings",
-    "rendezvous_shard_assign", "robust_zscore_events",
-    "scd2_apply_batch", "scd2_user_state_history",
-    "semantic_dedup_pairs", "semantic_dedup_survivors",
-    "stream_hll_users", "stream_incremental_dedup",
-    "stream_scd2_history", "stream_windowed_hll",
-    "substring_dedup_spans", "validate_events_audit",
-    "zorder_locality",
-    # oldest r6 greens, filling to 50
-    "asof_join_latest_order", "bigint_decimal",
-    "bloom_contamination_docs", "bollinger_bands_events",
-    "bpe_pair_counts", "compact_roundtrip",
-    "containment_pairs_docs", "drawdown_events",
-    "dup_cluster_best_docs", "global_moving_avg",
-    "global_running_sum", "interval_join_bursts",
-    "kerfsql_fby_filter", "kerfsql_tick_idioms", "macd_events",
-    "map_funcs", "merge_event_intervals", "ngram_novelty_docs",
-    "pq_encode_codes", "rand_det_uniform", "realized_vol_events",
-    "rolling_window_stats", "rsi_events", "session_windows",
-    "stochastic_events", "stream_drawdown", "stream_socket_ingest",
-    "tick_rule_flow", "volume_bars_events", "weighted_sample_docs",
-    "xbar_5min_bars",
-]
-# overshoots 50 on purpose: _reorder_registry truncates; the three
-# trailing r6 rows park green and head the r14 queue.
-
-
-#: Round-14 driver window (VERDICT r13 next #10 — keep the rotation
-#: honest): first every row whose RESULTS this round's optimization
-#: could touch — the rewritten asof merge operator, the whole
-#: text-index family (FORMAT 3 termstats sidecar), the pinned-spread
-#: bloom semi-join, the freshness-marker rollup/matview/keyed rows,
-#: and three stateful stream rows under the new RocksDB state store —
-#: then the OLDEST-checked rows filling to 50 (the r6 cohort that the
-#: r13 truncation parked, then r7 greens; staleness table mined from
-#: CORRECTNESS_r01..r13 in OPTIMIZATION_r14.md).  Every touched row
-#: was value-checked locally against the same DuckDB oracle before its
-#: commit — the slot-trading policy r11-r13 followed.
-_R14_WINDOW = [
-    # results-touched this round
+#: The 50 rows the driver checks next, in driver order.
+_DRIVER_WINDOW = [
+    # results touched by the last change
     "asof_merge_latest_order", "bm25_topk_docs", "bm25_append_topk",
     "bm25_stream_append_topk", "bm25_delete_topk", "bm25_upsert_topk",
     "near_search_docs", "phrase_search_docs", "inverted_index_terms",
@@ -15566,11 +14987,10 @@ _R14_WINDOW = [
     "matview_enriched_lineitem",
     "keyed_point_lookup", "keyed_tuple_lookup", "upsert_keyed_pruned",
     "stream_stream_join_batch", "stream_window_counts", "stream_ema",
-    # oldest-checked fillers: the parked r6 cohort ...
+    # oldest-checked rows, filling to 50
     "session_windows", "stochastic_events", "stream_drawdown",
     "stream_socket_ingest", "tick_rule_flow", "volume_bars_events",
     "weighted_sample_docs", "xbar_5min_bars",
-    # ... then the oldest r7 greens, filling to 50
     "ann_recall_meter", "atlas_collection_find", "atlas_drift_append",
     "atlas_json_struct", "atlas_nested_update", "atlas_schema_profile",
     "cosine_topk_exact", "ewma_user_value", "ffill_quotes",
@@ -15578,18 +14998,13 @@ _R14_WINDOW = [
     "ivf_ann_topk_oracle", "ivf_indexed_topk", "ivfpq_ann_topk",
     "ivfpq_indexed_topk", "kerf_lang_protected_eval", "lead_lag_shift",
     "lsh_ann_topk_oracle", "moving_avg", "ppjoin_exact_pairs",
-    "pq_ann_topk",
 ]
 
 
 def _reorder_registry() -> None:
     global QUERIES, ORACLES
-    window = [k for k in _R14_WINDOW if k in QUERIES][:50]
-    taken = set(window)
-    green = [k for k in _DRIVER_GREEN if k in QUERIES and k not in taken]
-    taken |= set(green)
-    rest = [k for k in QUERIES if k not in taken]  # r06 candidates, 51+
-    ordered = window + rest + green
+    window = set(_DRIVER_WINDOW)
+    ordered = _DRIVER_WINDOW + [k for k in QUERIES if k not in window]
     QUERIES = {k: QUERIES[k] for k in ordered}
     ORACLES = {k: ORACLES[k] for k in ordered if k in ORACLES}
 

@@ -280,23 +280,60 @@ def test_registry_plans_carry_no_unapproved_antipatterns(spark):
 
 def test_driver_window_is_the_first_fifty():
     """The driver evaluates exactly the first 50 registry entries per
-    round; the rotation window must BE that prefix, every name must
-    resolve, and never-checked new work must sit immediately after it
-    (before the parked greens) so the next rotation reaches it."""
-    from kerf_spark.queries import _DRIVER_GREEN, _R14_WINDOW
+    round; the window must BE that prefix and every name must resolve.
+    Every row outside it has been driver-checked at least once (a
+    record in some CORRECTNESS_r*.json), so no never-checked row is
+    parked out of reach."""
+    import glob
+    import json
+    import os
 
-    window = [k for k in _R14_WINDOW if k in QUERIES][:50]
-    assert len(window) == 50
-    assert list(QUERIES)[:50] == window
-    green = set(_DRIVER_GREEN)
-    rest = list(QUERIES)[50:]
-    # all parked greens come AFTER every never-checked candidate
-    seen_green = False
-    for k in rest:
-        if k in green:
-            seen_green = True
-        else:
-            assert not seen_green, f"{k} is parked behind greens"
+    from kerf_spark.queries import _DRIVER_WINDOW
+
+    assert len(_DRIVER_WINDOW) == len(set(_DRIVER_WINDOW)) == 50
+    assert all(k in QUERIES for k in _DRIVER_WINDOW)
+    assert list(QUERIES)[:50] == _DRIVER_WINDOW
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    checked = set()
+    for path in glob.glob(os.path.join(repo, "CORRECTNESS_r*.json")):
+        with open(path) as fh:
+            checked |= set(json.load(fh))
+    unchecked = [k for k in list(QUERIES)[50:] if k not in checked]
+    assert not unchecked, f"never driver-checked, past the window: {unchecked}"
+
+
+def test_scratch_dirs_are_removed_at_exit(spark, tmp_path, monkeypatch):
+    """Rows that need throwaway dirs take them under ONE per-process
+    scratch root that goes at interpreter exit.  A workspace row, a
+    folio row and a stream row run under a private temp dir; after the
+    exit cleanup no kerf_* dir is left there, and a real interpreter
+    exit runs the same cleanup."""
+    import os
+    import subprocess
+    import sys
+    import tempfile
+
+    import kerf_spark.queries as Q
+
+    def leftovers():
+        return sorted(p for p in os.listdir(tmp_path) if p.startswith("kerf_"))
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    monkeypatch.setattr(Q, "_SCRATCH", [])
+    for name in (
+        "asof_bucketed_colocated", "folio_partition_prune", "stream_hll_users"
+    ):
+        QUERIES[name](spark, SF)  # construct makes the row's dirs
+    assert len(leftovers()) == 1  # the one scratch root
+    Q._drop_scratch()
+    assert leftovers() == []
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    subprocess.run(
+        [sys.executable, "-c",
+         "import kerf_spark.queries as Q; assert Q._scratch('kerf_x_')"],
+        cwd=repo, env=dict(os.environ, TMPDIR=str(tmp_path)), check=True,
+    )
+    assert leftovers() == []
 
 
 @pytest.mark.parametrize(

@@ -858,45 +858,89 @@ def test_workspace_append_auto_backfills_late_rows(spark, tmp):
     assert len(RU.rollup_meta(path)["epochs"]) == n_epochs
 
 
-def test_freshness_marker_catches_same_byte_rewrite(spark, tmp_path):
-    """VERDICT r13 #1: the source-bytes freshness marker must fold
-    mtime in — a source rewrite that preserves total byte count still
-    reads as stale and rebuilds — while the fresh path stays a pure
-    stat probe (ZERO Spark jobs in its job group)."""
-    from kerf_spark.queries import QUERIES, _ann_index_dir, _src_bytes
+#: every registry row whose cached fixture goes through
+#: queries._cached_fixture (keyed_point_lookup reaches it through
+#: _keyed_orders_ws, delete_keyed_pruned through _cloned_keyed_orders)
+_CACHED_FIXTURE_ROWS = [
+    "rollup_incremental_bars", "matview_enriched_lineitem",
+    "rollup_backfill_bars", "workspace_rollup_append", "keyed_point_lookup",
+    "delete_keyed_pruned", "keyed_tuple_lookup",
+    "workspace_rollup_late_append", "rollup_quantile_bars",
+    "rollup_stream_bars",
+]
 
-    sfdir = str(tmp_path / "sfx")
-    os.makedirs(sfdir)
-    shutil.copyfile(
-        "/root/testdata/sf0.001/events.parquet",
-        os.path.join(sfdir, "events.parquet"),
-    )
-    q = QUERIES["rollup_incremental_bars"]
-    path = _ann_index_dir(sfdir, "rollup")
-    shutil.rmtree(path, ignore_errors=True)
-    try:
-        q(spark, sfdir).collect()  # builds + stamps the marker
-        m0 = RU.rollup_meta(path)["src_bytes"]
-        assert m0 == _src_bytes(sfdir, "events")
-        # fresh path: constructing the query runs NO Spark jobs
-        sc = spark.sparkContext
-        sc.setJobGroup("freshprobe_r14", "freshness probe")
+
+@pytest.fixture(scope="module")
+def fixture_sf(tmp_path_factory):
+    """A private copy of the sf0.001 sources the cached-fixture rows
+    read, so a test can bump their mtimes; its caches go afterwards."""
+    import glob
+
+    from kerf_spark.queries import _ann_index_dir
+
+    sfdir = str(tmp_path_factory.mktemp("sfx"))
+    for t in ("events", "orders", "lineitem", "part"):
+        shutil.copyfile(
+            f"/root/testdata/sf0.001/{t}.parquet",
+            os.path.join(sfdir, f"{t}.parquet"),
+        )
+    yield sfdir
+    for p in glob.glob(_ann_index_dir(sfdir, "*") + "*"):
+        if os.path.isdir(p):
+            shutil.rmtree(p, ignore_errors=True)
+        else:
+            os.remove(p)
+
+
+@pytest.mark.parametrize("row", _CACHED_FIXTURE_ROWS)
+def test_freshness_marker_catches_same_byte_rewrite(
+    spark, fixture_sf, monkeypatch, row
+):
+    """The cached-fixture freshness marker (``<root>.src``, written by
+    queries._cached_fixture) folds mtime in: a source rewrite that
+    keeps the total byte count still reads as stale and rebuilds, while
+    the fresh path stays a pure stat probe with ZERO Spark jobs."""
+    import itertools
+
+    import kerf_spark.queries as Q
+
+    sc = spark.sparkContext
+    real = Q._cached_fixture
+    calls = []  # one (root, sources, built, job ids) per helper call
+    ids = itertools.count()
+
+    def spy(root, sf, sources, build, valid):
+        built = []
+        group = f"freshprobe_{row}_{next(ids)}"
+        sc.setJobGroup(group, "freshness probe")
         try:
-            q(spark, sfdir)
+            real(root, sf, sources, lambda: built.append(build()), valid)
         finally:
             sc.setLocalProperty("spark.jobGroup.id", None)
-        assert (
-            list(sc.statusTracker().getJobIdsForGroup("freshprobe_r14"))
-            == []
-        )
-        assert RU.rollup_meta(path)["src_bytes"] == m0
-        # rewrite with IDENTICAL bytes but a new mtime -> stale
-        src = os.path.join(sfdir, "events.parquet")
+        jobs = list(sc.statusTracker().getJobIdsForGroup(group))
+        calls.append((root, sources, bool(built), jobs))
+
+    monkeypatch.setattr(Q, "_cached_fixture", spy)
+    q = Q.QUERIES[row]
+
+    def marker_src(root, sources):
+        with open(root + ".src") as fh:
+            assert fh.read() == ";".join(
+                Q._src_bytes(fixture_sf, n) for n in sources
+            )
+
+    q(spark, fixture_sf)  # builds and stamps the marker
+    root, sources, _, _ = calls[-1]
+    marker_src(root, sources)
+    del calls[:]
+    q(spark, fixture_sf)  # fresh path: no rebuild, no Spark job
+    assert [(c[2], c[3]) for c in calls] == [(False, [])]
+    # rewrite with IDENTICAL bytes but a new mtime -> stale
+    for n in sources:
+        src = os.path.join(fixture_sf, f"{n}.parquet")
         st = os.stat(src)
         os.utime(src, ns=(st.st_atime_ns, st.st_mtime_ns + 10**9))
-        m1 = _src_bytes(sfdir, "events")
-        assert m1 != m0
-        q(spark, sfdir).collect()  # rebuild happened: marker restamped
-        assert RU.rollup_meta(path)["src_bytes"] == m1
-    finally:
-        shutil.rmtree(path, ignore_errors=True)
+    del calls[:]
+    q(spark, fixture_sf)
+    assert [c[2] for c in calls] == [True]  # rebuilt ...
+    marker_src(root, sources)  # ... and restamped with the new mtime

@@ -8,7 +8,7 @@ by choosing the tag).  Uses the same session bootstrap as bench.py so
 the plans match what the bench executes.  Folio/server-backed queries
 produce the plan of the final gathered DataFrame — the member-side
 statements are separate Spark jobs inside the timed region and are
-profiled with tools/prof_query.py instead.
+profiled with ``python bench.py --only <query>`` instead.
 """
 
 from __future__ import annotations
@@ -24,14 +24,9 @@ def main() -> None:
     names = sys.argv[2:]
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
-    from kerf_spark import queries as Q
-    from kerf_spark.queries import QUERIES
+    from kerf_spark.queries import _BENCH_ONLY, QUERIES
     from kerf_spark.session import get_spark
 
-    extra = {
-        "minhash_dedup_pairs": Q.minhash_dedup_pairs,
-        "ivf_ann_topk": Q.ivf_ann_topk,
-    }
     spark = get_spark(
         "kerf_spark_plan_dump",
         extra_conf={"spark.ui.showConsoleProgress": "false"},
@@ -43,7 +38,7 @@ def main() -> None:
     suffix = os.path.basename(tag) if "/" in tag else ""
     os.makedirs(out_dir, exist_ok=True)
     for name in names:
-        fn = QUERIES.get(name) or extra[name]
+        fn = QUERIES.get(name) or _BENCH_ONLY[name]
         df = fn(spark, sf_dir)
         plan = df._sc._jvm.PythonSQLUtils.explainString(
             df._jdf.queryExecution(), "formatted"

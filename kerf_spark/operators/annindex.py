@@ -55,6 +55,7 @@ from pyspark.sql import functions as F
 
 from pyspark.sql import Window
 
+from ..sources.ledger import _read_sidecar, _write_sidecar
 from .similarity import (
     _c,
     _input_freshness,
@@ -86,18 +87,9 @@ _META = "ann_index.json"
 FORMAT = 2
 
 
-def _write_meta(path: str, meta: dict) -> None:
-    tmp = os.path.join(path, _META + ".tmp")
-    with open(tmp, "w") as fh:
-        json.dump(meta, fh)
-    # atomic swap: readers see the old complete sidecar or the new one
-    os.replace(tmp, os.path.join(path, _META))
-
-
 def index_meta(path: str) -> dict:
     """The index sidecar (kind, params, fits, row count, freshness)."""
-    with open(os.path.join(path, _META)) as fh:
-        return json.load(fh)
+    return _read_sidecar(path, _META)
 
 
 def _clear_derived(path: str, meta_name: str = _META) -> None:
@@ -223,7 +215,7 @@ def build_ivf_index(
         "schema": schema_json,
         "freshness": list(_input_freshness(corpus)),
     }
-    _write_meta(path, meta)
+    _write_sidecar(path, _META, meta)
     return meta
 
 
@@ -343,7 +335,7 @@ def build_pq_index(
         "schema": schema_json,
         "freshness": list(_input_freshness(corpus)),
     }
-    _write_meta(path, meta)
+    _write_sidecar(path, _META, meta)
     return meta
 
 
@@ -399,7 +391,7 @@ def build_ivfpq_index(
         "schema": schema_json,
         "freshness": list(_input_freshness(corpus)),
     }
-    _write_meta(path, meta)
+    _write_sidecar(path, _META, meta)
     return meta
 
 
@@ -650,7 +642,7 @@ def append_to_index(path: str, rows: DataFrame) -> dict:
         # serialize at micro-batch granularity — a write racing INSIDE
         # one epoch's landing is outside the lock-free contract.
         meta["stream_base"] = gen + 1
-    _write_meta(path, meta)
+    _write_sidecar(path, _META, meta)
     return meta
 
 
@@ -745,7 +737,7 @@ def delete_from_index(path: str, ids) -> dict:
     )
     meta["tombstones"] = int(n)
     meta["tomb_killed"] = int(meta.get("tomb_killed", 0)) + int(killed)
-    _write_meta(path, meta)
+    _write_sidecar(path, _META, meta)
     return meta
 
 
@@ -768,12 +760,12 @@ def upsert_into_index(path: str, rows: DataFrame) -> dict:
     _check_not_folding(meta, path)
     idname = _tomb_id(meta)
     meta["upserting"] = True
-    _write_meta(path, meta)  # intent marker: delete→append window
+    _write_sidecar(path, _META, meta)  # intent marker: delete→append window
     delete_from_index(path, rows.select(_c(meta["id_col"]).alias(idname)))
     meta = append_to_index(path, rows)
     meta["upserts"] = meta.get("upserts", 0) + 1
     meta.pop("upserting", None)
-    _write_meta(path, meta)  # commit: marker cleared last
+    _write_sidecar(path, _META, meta)  # commit: marker cleared last
     return meta
 
 
@@ -803,7 +795,7 @@ def index_stream_sink(path: str):
     _check_not_upserting(meta, path)
     base = _gen_high(path, meta) + 1
     meta["stream_base"] = base
-    _write_meta(path, meta)
+    _write_sidecar(path, _META, meta)
 
     def sink(batch: DataFrame, epoch_id: int) -> None:
         live = index_meta(path)  # re-based by any interleaved append
@@ -986,7 +978,7 @@ def compact_index(spark: SparkSession, path: str) -> dict:
     w.parquet(tmp)
     n_rows = _read(spark, tmp, meta.get("schema")).count()
     meta["folding"] = True
-    _write_meta(path, meta)  # intent marker: metadata window begins
+    _write_sidecar(path, _META, meta)  # intent marker: metadata window begins
     old = bpath + ".old"
     os.rename(bpath, old)
     os.rename(tmp, bpath)
@@ -1000,7 +992,7 @@ def compact_index(spark: SparkSession, path: str) -> dict:
     meta["seq"] = 0
     meta["tomb_killed"] = 0
     meta["compactions"] = meta.get("compactions", 0) + 1
-    _write_meta(path, meta)  # commit: marker cleared last
+    _write_sidecar(path, _META, meta)  # commit: marker cleared last
     return meta
 
 

@@ -66,6 +66,7 @@ def _check_terms(terms) -> list[str]:
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..sources.ledger import _read_sidecar, _write_sidecar
 from .similarity import _input_freshness
 
 _META = "text_index.json"
@@ -86,17 +87,8 @@ _META = "text_index.json"
 FORMAT = 4
 
 
-def _write_meta(path: str, meta: dict) -> None:
-    os.makedirs(path, exist_ok=True)
-    tmp = os.path.join(path, _META + ".tmp")
-    with open(tmp, "w") as fh:
-        json.dump(meta, fh)
-    os.replace(tmp, os.path.join(path, _META))
-
-
 def index_meta(path: str) -> dict:
-    with open(os.path.join(path, _META)) as fh:
-        return json.load(fh)
+    return _read_sidecar(path, _META)
 
 
 def is_stale(path: str, docs: DataFrame) -> bool:
@@ -320,7 +312,7 @@ def build_text_index(
         "schemas": schemas,
         "freshness": list(_input_freshness(docs)),
     }
-    _write_meta(path, meta)
+    _write_sidecar(path, _META, meta)
     return meta
 
 
@@ -499,7 +491,7 @@ def delete_from_text_index(path: str, ids) -> dict:
         # marker set, queries refuse, is_stale() rebuilds — never a
         # silent double-subtraction on replay.
         meta["deleting"] = True
-        _write_meta(path, meta)
+        _write_sidecar(path, _META, meta)
         (
             _index_table(spark, path, "postings", meta)
             .join(F.broadcast(rows), id_col, "left_semi")
@@ -533,7 +525,7 @@ def delete_from_text_index(path: str, ids) -> dict:
         int(meta.get("tomb_stats_docs", 0)) + int(gone["n"])
     )
     meta.pop("deleting", None)
-    _write_meta(path, meta)  # commit: marker cleared last
+    _write_sidecar(path, _META, meta)  # commit: marker cleared last
     return meta
 
 
@@ -556,12 +548,12 @@ def upsert_into_text_index(path: str, docs: DataFrame) -> dict:
     _check_not_folding(meta, path)
     _check_not_deleting(meta, path)
     meta["upserting"] = True
-    _write_meta(path, meta)  # intent marker: delete→append window
+    _write_sidecar(path, _META, meta)  # intent marker: delete→append window
     delete_from_text_index(path, docs.select(meta["id_col"]))
     meta = append_to_text_index(path, docs)
     meta["upserts"] = meta.get("upserts", 0) + 1
     meta.pop("upserting", None)
-    _write_meta(path, meta)  # commit: marker cleared last
+    _write_sidecar(path, _META, meta)  # commit: marker cleared last
     return meta
 
 
@@ -907,7 +899,7 @@ def append_to_text_index(path: str, docs: DataFrame) -> dict:
         # (gen+1)+epoch_id > gen — no future stream row can carry a
         # generation <= an __upto issued after this append
         meta["stream_base"] = gen + 1
-    _write_meta(path, meta)
+    _write_sidecar(path, _META, meta)
     return meta
 
 
@@ -928,7 +920,7 @@ def text_index_stream_sink(path: str):
     _check_not_deleting(meta, path)
     base = _gen_high(path, meta) + 1
     meta["stream_base"] = base
-    _write_meta(path, meta)
+    _write_sidecar(path, _META, meta)
 
     def sink(batch: DataFrame, epoch_id: int) -> None:
         live = index_meta(path)  # re-based by any interleaved append
@@ -1032,7 +1024,7 @@ def compact_text_index(spark: SparkSession, path: str) -> dict:
     )
     names = names + ["termstats"]
     meta["folding"] = True
-    _write_meta(path, meta)  # intent marker: metadata window begins
+    _write_sidecar(path, _META, meta)  # intent marker: metadata window begins
     for name in names:
         bpath = os.path.join(path, name)
         if os.path.isdir(bpath):
@@ -1060,5 +1052,5 @@ def compact_text_index(spark: SparkSession, path: str) -> dict:
     meta["n_docs"] = int(stats["n"])
     meta["sum_dl"] = int(stats["s"])
     meta["compactions"] = meta.get("compactions", 0) + 1
-    _write_meta(path, meta)
+    _write_sidecar(path, _META, meta)
     return meta

@@ -14744,7 +14744,7 @@ def keyed_tuple_lookup(spark, sf):
 )
 def workspace_rollup_late_append(spark, sf):
     """LATE-DATA AUTO-BACKFILL on an attached continuous aggregate
-    (catalog._maintain_rollups — VERDICT r8 missing #5): seed the
+    (catalog._maintain_attached — VERDICT r8 missing #5): seed the
     workspace table with a time-range GAP (the middle 40–70%% band
     missing) plus part of the tail, attach 5-minute bars, then append
     ONE mixed batch holding both the gap's stragglers (behind the

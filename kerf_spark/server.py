@@ -135,6 +135,10 @@ ARROW_MAX_UPLOAD_BYTES = 1 << 30
 #: honest plane and the error says so
 SHIP_MAX_ROWS = 10_000_000
 
+#: target staged bytes per checkpoint block of a reshard receiver: a
+#: member's block count is its staged Arrow bytes over this
+_RESHARD_PART_BYTES = 64 << 20
+
 
 def _json_cell(v: Any) -> Any:
     import datetime
@@ -2117,9 +2121,6 @@ def folio_reshard(
     # §2.2: partitions in the ~100 MB range, derived from real data
     # size, never a constant tuned for one scale
     staged_bytes: dict[int, int] = {j: 0 for j in range(n)}
-    part_bytes = int(
-        os.environ.get("KERF_RESHARD_PART_BYTES", str(64 << 20))
-    )
     try:
         if n > 1 and via == "arrow":
             with _fut.ThreadPoolExecutor(max_workers=n) as pool:
@@ -2193,7 +2194,7 @@ def folio_reshard(
             arrow_multi = via == "arrow" and n > 1
             if arrow_multi:
                 pub["coalesce"] = max(
-                    1, -(-staged_bytes[j] // part_bytes)
+                    1, -(-staged_bytes[j] // _RESHARD_PART_BYTES)
                 )
                 # the staged count (the conservation check's "after")
                 # rides the publish RESPONSE — one statement round per

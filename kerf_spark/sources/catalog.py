@@ -689,8 +689,7 @@ class Workspace:
             self._flush()
         # a re-save REPLACES the table: every attached derived artifact
         # (rollups over it, matviews using it as fact or dim) rebuilds
-        self._maintain_rollups(name, rebuild=True)
-        self._maintain_matviews(name)
+        self._maintain_attached(name)
 
     def _data_dir(self, meta: dict) -> str:
         """The directory holding the version THIS instance's manifest
@@ -1304,14 +1303,13 @@ class Workspace:
         for the query-side operators.  The sidecar stays the source of
         truth (rebuilds/appends/compactions mutate it freely); the
         manifest holds only the pointer and the adopted-at snapshot."""
-        meta = None
+        from .ledger import _read_sidecar
+
         for sidecar in ("ann_index.json", "text_index.json", "rollup.json"):
-            p = os.path.join(path, sidecar)
-            if os.path.exists(p):
-                with open(p) as fh:
-                    meta = json.load(fh)
+            if os.path.exists(os.path.join(path, sidecar)):
+                meta = _read_sidecar(path, sidecar)
                 break
-        if meta is None:
+        else:
             raise ValueError(f"no index sidecar found under {path}")
         entry = {
             "path": path,
@@ -1323,23 +1321,110 @@ class Workspace:
         return entry
 
     def indexes(self) -> list[str]:
-        return sorted(self.manifest.get("indexes", {}))
+        return self._attached("indexes")
 
     def index_path(self, name: str) -> str:
-        try:
-            return self.manifest["indexes"][name]["path"]
-        except KeyError:
-            raise KeyError(f"no index named {name!r} in this workspace")
+        return self._attached_path("indexes", name)
 
     def drop_index(self, name: str, delete: bool = False) -> None:
         """Forget (and with ``delete`` remove from disk) an index."""
-        entry = self.manifest.get("indexes", {}).pop(name, None)
-        self._dropped.setdefault("indexes", set()).add(name)
+        self._detach("indexes", name, delete)
+
+    # ------------------------------------------- attached derived artifacts
+    #: manifest section -> the noun its lookups name in errors
+    _ATTACHED = {
+        "indexes": "index", "rollups": "rollup", "matviews": "matview",
+    }
+
+    def _attached(self, section: str, table: str | None = None) -> list[str]:
+        """Names in ``section``, or those built over ``table`` (a
+        rollup's table, a matview's fact or dim)."""
+        return sorted(
+            n for n, e in self.manifest.get(section, {}).items()
+            if table is None
+            or table in (e.get("table"), e.get("fact"), e.get("dim"))
+        )
+
+    def _attached_path(self, section: str, name: str) -> str:
+        try:
+            return self.manifest[section][name]["path"]
+        except KeyError:
+            raise KeyError(
+                f"no {self._ATTACHED[section]} named {name!r} in this "
+                f"workspace"
+            )
+
+    def _detach(self, section: str, name: str, delete: bool) -> None:
+        entry = self.manifest.get(section, {}).pop(name, None)
+        self._dropped.setdefault(section, set()).add(name)
         self._flush()
         if delete and entry is not None:
             import shutil
 
             shutil.rmtree(entry["path"], ignore_errors=True)
+
+    def _rebuild_attached(self, entry: dict) -> None:
+        from . import matview as MV
+        from . import rollup as RU
+
+        if "table" in entry:
+            RU.create_rollup(
+                self.load(entry["table"]), entry["path"], **entry["spec"]
+            )
+        else:
+            MV.create_enrich_view(
+                self.load(entry["fact"]), self.load(entry["dim"]),
+                entry["path"], **entry["spec"],
+            )
+
+    def _maintain_attached(
+        self, table: str, increment: DataFrame | None = None
+    ) -> None:
+        """Post-write hook for every rollup and matview over ``table``:
+        an append (``increment`` given) to a rollup's table or a view's
+        FACT refreshes; any other write — a history rewrite, or any
+        change to a view's DIM (its stored snapshot goes stale) —
+        rebuilds.  LATE-DATA AUTO-BACKFILL: appended rows behind the
+        watermark, which the refresh's tail filter would skip, are
+        found by one probe of the increment (stored history behind the
+        watermark was already folded) and backfilled, so a mixed
+        late+tail batch folds EXACTLY once."""
+        hit = [
+            self.manifest[section][n]
+            for section in ("rollups", "matviews")
+            for n in self._attached(section, table)
+        ]
+        if not hit:
+            return
+        from ..errors import ArgsError
+        from . import ledger as L
+        from . import matview as MV
+        from . import rollup as RU
+
+        for e in hit:
+            if increment is None or e.get("dim") == table:
+                self._rebuild_attached(e)
+                continue
+            led = (RU if "table" in e else MV)._LEDGER
+            try:
+                meta = led.meta(e["path"])
+            except ArgsError:
+                # stale on-disk FORMAT (code upgraded under an existing
+                # workspace) or an interrupted compaction: take the
+                # correctness-over-cost path upsert takes — rebuild
+                # from the base tables — instead of wedging every
+                # append on the attached artifact (ADVICE r9)
+                self._rebuild_attached(e)
+                continue
+            late = None
+            w = meta.get("watermark_ns")
+            if w is not None:
+                late = increment.where(L._tns(meta) < F.lit(int(w)))
+                if late.limit(1).count() == 0:
+                    late = None
+            led.fold(self.spark, e["path"], self.load(table))
+            if late is not None:
+                led.fold(self.spark, e["path"], late, backfill=True)
 
     # ------------------------------------------------- attached rollups
     def attach_rollup(
@@ -1390,79 +1475,13 @@ class Workspace:
         return entry
 
     def rollups(self, table: str | None = None) -> list[str]:
-        ents = self.manifest.get("rollups", {})
-        return sorted(
-            n for n, e in ents.items() if table is None or e["table"] == table
-        )
+        return self._attached("rollups", table)
 
     def rollup_path(self, name: str) -> str:
-        try:
-            return self.manifest["rollups"][name]["path"]
-        except KeyError:
-            raise KeyError(f"no rollup named {name!r} in this workspace")
+        return self._attached_path("rollups", name)
 
     def detach_rollup(self, name: str, delete: bool = False) -> None:
-        entry = self.manifest.get("rollups", {}).pop(name, None)
-        self._dropped.setdefault("rollups", set()).add(name)
-        self._flush()
-        if delete and entry is not None:
-            import shutil
-
-            shutil.rmtree(entry["path"], ignore_errors=True)
-
-    def _maintain_rollups(
-        self,
-        table: str,
-        rebuild: bool = False,
-        increment: DataFrame | None = None,
-    ) -> None:
-        """Post-write hook: fold the table's new tail into every
-        attached rollup (append) or rebuild them (upsert — history
-        moved behind the watermark, a refresh would miss it).
-
-        LATE-DATA AUTO-BACKFILL: when the appended ``increment`` is
-        given, rows behind the rollup's watermark — which the refresh's
-        pushed-down tail filter would silently skip (the documented
-        continuous-aggregate contract) — are detected with one cheap
-        count over the increment and routed through
-        ``backfill_rollup`` instead of being dropped.  Only the
-        increment is probed (stored history behind the watermark was
-        already folded), so a mixed late+tail batch folds EXACTLY once:
-        tail via refresh, stragglers via backfill."""
-        ents = self.manifest.get("rollups", {})
-        hit = [n for n, e in ents.items() if e["table"] == table]
-        if not hit:
-            return
-        from . import rollup as RU
-
-        from ..errors import ArgsError
-
-        for n in hit:
-            e = ents[n]
-            if rebuild:
-                RU.create_rollup(self.load(table), e["path"], **e["spec"])
-                continue
-            try:
-                meta = RU.rollup_meta(e["path"])
-            except ArgsError:
-                # stale on-disk FORMAT (code upgraded under an existing
-                # workspace) or an interrupted compaction: take the
-                # correctness-over-cost path upsert takes — rebuild
-                # from the base table — instead of wedging every
-                # append on the attached artifact (ADVICE r9,
-                # rollup.py:86)
-                RU.create_rollup(self.load(table), e["path"], **e["spec"])
-                continue
-            late = None
-            if increment is not None:
-                w = meta.get("watermark_ns")
-                if w is not None:
-                    late = increment.where(RU._tns(meta) < F.lit(int(w)))
-                    if late.limit(1).count() == 0:
-                        late = None
-            RU.refresh_rollup(self.spark, e["path"], self.load(table))
-            if late is not None:
-                RU.backfill_rollup(self.spark, e["path"], late)
+        self._detach("rollups", name, delete)
 
     # ------------------------------------------------ attached matviews
     def attach_matview(
@@ -1503,84 +1522,13 @@ class Workspace:
         return entry
 
     def matviews(self, table: str | None = None) -> list[str]:
-        ents = self.manifest.get("matviews", {})
-        return sorted(
-            n for n, e in ents.items()
-            if table is None or table in (e["fact"], e["dim"])
-        )
+        return self._attached("matviews", table)
 
     def matview_path(self, name: str) -> str:
-        try:
-            return self.manifest["matviews"][name]["path"]
-        except KeyError:
-            raise KeyError(f"no matview named {name!r} in this workspace")
+        return self._attached_path("matviews", name)
 
     def detach_matview(self, name: str, delete: bool = False) -> None:
-        entry = self.manifest.get("matviews", {}).pop(name, None)
-        self._dropped.setdefault("matviews", set()).add(name)
-        self._flush()
-        if delete and entry is not None:
-            import shutil
-
-            shutil.rmtree(entry["path"], ignore_errors=True)
-
-    def _maintain_matviews(
-        self,
-        table: str,
-        fact_append: bool = False,
-        increment: DataFrame | None = None,
-    ) -> None:
-        """Post-write hook: a fact append refreshes (tail fold); every
-        other shape — fact history rewrite, or any dim change — rebuilds
-        (the stored snapshot is stale either way).
-
-        LATE-DATA AUTO-BACKFILL (the rollup hook's mirror): appended
-        fact rows behind the view's watermark — which the refresh's
-        tail filter would silently skip — are detected on the
-        ``increment`` and enriched through ``backfill_enrich_view``,
-        so a mixed late+tail batch lands each row exactly once."""
-        ents = self.manifest.get("matviews", {})
-        hit = [
-            n for n, e in ents.items() if table in (e["fact"], e["dim"])
-        ]
-        if not hit:
-            return
-        from . import matview as MV
-
-        from ..errors import ArgsError
-
-        for n in hit:
-            e = ents[n]
-            if fact_append and e["fact"] == table and e["dim"] != table:
-                try:
-                    meta = MV.matview_meta(e["path"])
-                except ArgsError:
-                    # stale FORMAT / interrupted compaction: rebuild
-                    # instead of wedging the append (rollup mirror)
-                    MV.create_enrich_view(
-                        self.load(e["fact"]), self.load(e["dim"]),
-                        e["path"], **e["spec"],
-                    )
-                    continue
-                late = None
-                if increment is not None:
-                    w = meta.get("watermark_ns")
-                    if w is not None:
-                        late = increment.where(
-                            MV._tns(meta) < F.lit(int(w))
-                        )
-                        if late.limit(1).count() == 0:
-                            late = None
-                MV.refresh_enrich_view(
-                    self.spark, e["path"], self.load(e["fact"])
-                )
-                if late is not None:
-                    MV.backfill_enrich_view(self.spark, e["path"], late)
-            else:
-                MV.create_enrich_view(
-                    self.load(e["fact"]), self.load(e["dim"]),
-                    e["path"], **e["spec"],
-                )
+        self._detach("matviews", name, delete)
 
     def register_external(
         self,
@@ -1880,8 +1828,7 @@ class Workspace:
             stored_inc = rd.schema(
                 T.StructType.fromJson(meta["schema"])
             ).parquet(*new_files)
-        self._maintain_rollups(name, increment=stored_inc)
-        self._maintain_matviews(name, fact_append=True, increment=stored_inc)
+        self._maintain_attached(name, increment=stored_inc)
 
     def upsert(
         self, name: str, rows: DataFrame, keys: Sequence[str] | None = None
@@ -1929,8 +1876,7 @@ class Workspace:
                 )
         if meta.get("key") and meta.get("key_file_ranges"):
             if self._upsert_keyed_pruned(name, meta, rows):
-                self._maintain_rollups(name, rebuild=True)
-                self._maintain_matviews(name)
+                self._maintain_attached(name)
                 return
         merged = upsert_rows(self.load(name), rows, keys)
         staging = meta["path"] + ".staging"
@@ -1969,8 +1915,7 @@ class Workspace:
         self._flush()
         # upsert rewrites history behind attached rollups' watermarks —
         # a refresh would miss it, so they rebuild (documented contract)
-        self._maintain_rollups(name, rebuild=True)
-        self._maintain_matviews(name)
+        self._maintain_attached(name)
 
     #: a keyed upsert whose incoming key range covers more than this
     #: fraction of the table's data files rewrites the whole table
@@ -2448,8 +2393,7 @@ class Workspace:
             if live:
                 meta["sort_key_max"] = max(r[1] for r in live)
             self._flush()
-        self._maintain_rollups(name, rebuild=True)
-        self._maintain_matviews(name)
+        self._maintain_attached(name)
         return int(n_del)
 
     def delete_range(self, name: str, lo=None, hi=None) -> int:
@@ -2691,8 +2635,7 @@ class Workspace:
         if live:
             meta["sort_key_max"] = max(r[1] for r in live)
         self._flush()
-        self._maintain_rollups(name, rebuild=True)
-        self._maintain_matviews(name)
+        self._maintain_attached(name)
         return int(n_del)
 
     def _staged_pruned_swap(
@@ -3138,8 +3081,7 @@ class Workspace:
                     }
                 self.manifest["tables"][t] = meta
                 self._flush()
-            self._maintain_rollups(t, rebuild=True)
-            self._maintain_matviews(t)
+            self._maintain_attached(t)
 
     def prune_snapshots(self, keep: int) -> list[str]:
         """Snapshot retention: drop all but the newest ``keep``

@@ -9,9 +9,10 @@ query time pays the dimension broadcast on every query; the
 materialized view pays it once per increment and every downstream read
 is a plain pruned scan.
 
-Design (the rollup's epoch-LSM discipline, minus the merge — an
-enrichment view is APPEND-ONLY because each epoch's fact rows are
-disjoint by the watermark, so epochs union instead of superseding):
+Design (the epoch-ledger protocol of ``sources.ledger``, shared with
+the rollup, minus the merge — an enrichment view is APPEND-ONLY because
+each epoch's fact rows are disjoint by the watermark, so epochs union
+instead of superseding):
 
 * ``create_enrich_view`` snapshots the DIMENSION inside the view
   (``dim/`` parquet — the view is self-contained; enrichment uses the
@@ -20,7 +21,7 @@ disjoint by the watermark, so epochs union instead of superseding):
   current contents, and lands ``rows/epoch=0/part_ns=P/`` partitioned
   by a coarse bucket of the fact's time column.
 * ``refresh_enrich_view`` reads the fact tail behind the watermark
-  (raw-column pushed-down predicate — the rollup's ``_increment``),
+  (raw-column pushed-down predicate — the ledger's ``_increment``),
   joins it against the BROADCAST stored dim, and appends one new epoch.
   Epochs are disjoint row sets, so the read is a union of every
   epoch's selected partitions; replays overwrite their own epoch dir
@@ -39,49 +40,23 @@ ingest time).  Exactness: the join adds no arithmetic, so incremental
 
 from __future__ import annotations
 
-import json
 import os
-import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from ..errors import ArgsError
-from ..functions.temporal import DAY, ts_to_ns, xbar
-from .rollup import _increment, cast_to, promote_schema
+from ..functions.temporal import DAY, xbar
+from . import ledger as L
 
 _META = "matview.json"
 #: bump when the on-disk layout changes: readers refuse loudly
 FORMAT = 1
 
 
-def _write_meta(path: str, meta: dict) -> None:
-    tmp = os.path.join(path, _META + ".tmp")
-    with open(tmp, "w") as fh:
-        json.dump(meta, fh)
-    os.replace(tmp, os.path.join(path, _META))  # atomic swap
-
-
 def matview_meta(path: str) -> dict:
     """The view sidecar (spec, watermark, epoch ledger)."""
-    with open(os.path.join(path, _META)) as fh:
-        meta = json.load(fh)
-    if meta.get("format") != FORMAT:
-        raise ArgsError(
-            f"matview at {path} has format {meta.get('format')}, "
-            f"this code reads format {FORMAT} — rebuild it"
-        )
-    if meta.get("folding"):
-        raise ArgsError(
-            f"matview at {path} has an interrupted compaction — rebuild it"
-        )
-    return meta
-
-
-def _tns(meta: dict):
-    c = F.col(meta["time_col"])
-    return ts_to_ns(c) if meta["time_kind"] == "timestamp" else c.cast("long")
+    return _LEDGER.meta(path)
 
 
 def _enrich(fact: DataFrame, dim: DataFrame, meta: dict) -> DataFrame:
@@ -93,9 +68,19 @@ def _enrich(fact: DataFrame, dim: DataFrame, meta: dict) -> DataFrame:
     on = meta["on"]
     dimj = F.broadcast(dim) if meta.get("broadcast_dim", True) else dim
     out = fact.join(dimj, on, "left")
-    part = xbar(_tns(meta), int(meta["part_width_ns"]))
+    part = xbar(L._tns(meta), int(meta["part_width_ns"]))
     cols = meta["columns"]
     return out.select(*[F.col(c) for c in cols], part.alias("part_ns"))
+
+
+def _derive(spark: SparkSession, path: str, rows: DataFrame, meta: dict):
+    return _enrich(rows, spark.read.parquet(os.path.join(path, "dim")), meta)
+
+
+_LEDGER = L.Ledger(
+    kind="matview", verb="enrich_view", sidecar=_META, tree="rows",
+    schema_key="rows_schema", format=FORMAT, derive=_derive,
+)
 
 
 def create_enrich_view(
@@ -122,16 +107,8 @@ def create_enrich_view(
     the increment side is still only the watermark tail."""
     if not on:
         raise ArgsError("need at least one join key")
-    dt = dict(zip(fact.schema.names, fact.schema.fields))
-    if time_col not in dt:
+    if time_col not in fact.columns:
         raise ArgsError(f"time_col {time_col!r} not in fact columns")
-    kind = (
-        "timestamp"
-        if isinstance(
-            dt[time_col].dataType, (T.TimestampType, T.TimestampNTZType)
-        )
-        else "ns"
-    )
     if columns is None:
         columns = list(fact.columns) + [
             c for c in dim.columns if c not in on
@@ -139,48 +116,21 @@ def create_enrich_view(
     missing = [c for c in on if c not in fact.columns or c not in dim.columns]
     if missing:
         raise ArgsError(f"join keys missing from fact or dim: {missing}")
-    if os.path.isdir(path):
-        shutil.rmtree(path)  # build hygiene: never union a prior life
-    os.makedirs(path, exist_ok=True)
-    dpath = os.path.join(path, "dim")
-    dim.write.mode("overwrite").parquet(dpath)
-    spark = fact.sparkSession
-    dim_stored = spark.read.parquet(dpath)
+    L._reset(path)  # build hygiene: never union a prior life
+    dim.write.mode("overwrite").parquet(os.path.join(path, "dim"))
     meta = {
         "format": FORMAT,
         "kind": "matview",
         "on": list(on),
         "time_col": time_col,
-        "time_kind": kind,
+        "time_kind": L._time_kind(fact, time_col),
         "columns": list(columns),
         "part_width_ns": int(part_width_ns),
         "broadcast_dim": bool(broadcast_dim),
         "watermark_ns": None,
         "epochs": [],
     }
-    stats = fact.agg(
-        F.count(F.lit(1)).alias("n"), F.max(_tns(meta)).alias("mx")
-    ).head()
-    rows = _enrich(fact, dim_stored, meta)
-    meta["rows_schema"] = rows.drop("part_ns").schema.jsonValue()
-    if stats["n"] == 0:
-        meta["watermark_ns"] = 0
-        _write_meta(path, meta)
-        return meta
-    edir = os.path.join(path, "rows", "epoch=0")
-    rows.write.mode("overwrite").partitionBy("part_ns").parquet(edir)
-    parts = sorted(
-        int(d.split("=", 1)[1])
-        for d in os.listdir(edir)
-        if d.startswith("part_ns=")
-    )
-    meta["watermark_ns"] = int(stats["mx"]) + 1
-    meta["epochs"] = [
-        {"epoch": 0, "watermark_ns": meta["watermark_ns"], "parts": parts,
-         "schema": meta["rows_schema"]}
-    ]
-    _write_meta(path, meta)
-    return meta
+    return _LEDGER.create(path, meta, fact)
 
 
 def refresh_enrich_view(spark: SparkSession, path: str, fact: DataFrame) -> dict:
@@ -188,49 +138,7 @@ def refresh_enrich_view(spark: SparkSession, path: str, fact: DataFrame) -> dict
     epoch.  Cost shape: one pushed-down tail scan + one broadcast join
     over the increment — never the view, never the history.  Replay-
     idempotent (deterministic epoch content, sidecar committed last)."""
-    meta = matview_meta(path)
-    if meta["watermark_ns"] is None:
-        raise ArgsError(f"matview at {path} was never created")
-    w_old = int(meta["watermark_ns"])
-    inc = _increment(fact, meta)
-    stats = inc.agg(
-        F.count(F.lit(1)).alias("n"), F.max(_tns(meta)).alias("mx")
-    ).head()
-    if stats["n"] == 0:
-        return {"rows": 0, "parts": [], "watermark_ns": w_old}
-    dim = spark.read.parquet(os.path.join(path, "dim"))
-    epoch = len(meta["epochs"])
-    edir = os.path.join(path, "rows", f"epoch={epoch}")
-    rows = _enrich(inc, dim, meta)
-    # width promotion (the rollup discipline): a fact that widened
-    # since create widens the view schema; old epochs widen at read
-    target = promote_schema(
-        T.StructType.fromJson(meta["rows_schema"]),
-        rows.drop("part_ns").schema,
-    )
-    meta["rows_schema"] = target.jsonValue()
-    part_col = rows.schema["part_ns"]
-    rows = cast_to(
-        rows,
-        T.StructType(list(target.fields) + [part_col]),
-    )
-    rows.write.mode("overwrite").partitionBy("part_ns").parquet(edir)
-    parts = sorted(
-        int(d.split("=", 1)[1])
-        for d in os.listdir(edir)
-        if d.startswith("part_ns=")
-    )
-    meta["epochs"].append(
-        {"epoch": epoch, "watermark_ns": int(stats["mx"]) + 1,
-         "parts": parts, "schema": target.jsonValue()}
-    )
-    meta["watermark_ns"] = int(stats["mx"]) + 1
-    _write_meta(path, meta)  # commit point
-    return {
-        "rows": int(stats["n"]),
-        "parts": parts,
-        "watermark_ns": meta["watermark_ns"],
-    }
+    return _LEDGER.fold(spark, path, fact)
 
 
 def read_enrich_view(
@@ -244,32 +152,14 @@ def read_enrich_view(
     sidecar ledger (epochs are disjoint row sets, so every epoch's
     overlapping partitions union in)."""
     meta = matview_meta(path)
-    pw = int(meta["part_width_ns"])
-    schema = T.StructType.fromJson(meta["rows_schema"])
-    rows = None
-    for e in meta["epochs"]:
-        leafs = [
-            os.path.join(
-                path, "rows", f"epoch={e['epoch']}", f"part_ns={p}"
-            )
-            for p in e["parts"]
-            if (lo_ns is None or int(p) + pw > lo_ns)
-            and (hi_ns is None or int(p) <= hi_ns)
-        ]
-        if not leafs:
-            continue
-        esch = T.StructType.fromJson(e.get("schema") or meta["rows_schema"])
-        df = cast_to(spark.read.schema(esch).parquet(*leafs), schema)
-        rows = df if rows is None else rows.unionByName(df)
-    if rows is None:
-        rows = spark.createDataFrame([], schema)
+    rows = _LEDGER.read(spark, path, meta, lo_ns, hi_ns)
     if (lo_ns is not None or hi_ns is not None) and meta[
         "time_col"
-    ] in schema.names:
+    ] in rows.columns:
         # row-level trim inside the boundary partitions — only when
         # the view stored its time column; otherwise the read is
         # partition-granular (the leaf selection above), documented
-        tns = _tns(meta)
+        tns = L._tns(meta)
         if lo_ns is not None:
             rows = rows.where(tns >= F.lit(int(lo_ns)))
         if hi_ns is not None:
@@ -288,44 +178,7 @@ def backfill_enrich_view(
     refresh).  The caller asserts these rows were never enriched
     before: epochs stay disjoint row sets, which is what makes the
     read a plain union."""
-    meta = matview_meta(path)
-    if meta["watermark_ns"] is None:
-        raise ArgsError(f"matview at {path} was never created")
-    w = int(meta["watermark_ns"])
-    tns = _tns(meta)
-    stats = late_rows.agg(
-        F.count(F.lit(1)).alias("n"), F.max(tns).alias("mx")
-    ).head()
-    if stats["n"] == 0:
-        return {"rows": 0, "parts": []}
-    if int(stats["mx"]) >= w:
-        raise ArgsError(
-            f"backfill_enrich_view got rows at/after the watermark "
-            f"({w}) — those belong to refresh_enrich_view"
-        )
-    dim = spark.read.parquet(os.path.join(path, "dim"))
-    epoch = len(meta["epochs"])
-    edir = os.path.join(path, "rows", f"epoch={epoch}")
-    rows = _enrich(late_rows, dim, meta)
-    target = promote_schema(
-        T.StructType.fromJson(meta["rows_schema"]),
-        rows.drop("part_ns").schema,
-    )
-    meta["rows_schema"] = target.jsonValue()
-    part_col = rows.schema["part_ns"]
-    rows = cast_to(rows, T.StructType(list(target.fields) + [part_col]))
-    rows.write.mode("overwrite").partitionBy("part_ns").parquet(edir)
-    parts = sorted(
-        int(d.split("=", 1)[1])
-        for d in os.listdir(edir)
-        if d.startswith("part_ns=")
-    )
-    meta["epochs"].append(
-        {"epoch": epoch, "watermark_ns": w, "parts": parts,
-         "backfill": True, "schema": target.jsonValue()}
-    )
-    _write_meta(path, meta)  # commit point (watermark unchanged)
-    return {"rows": int(stats["n"]), "parts": parts}
+    return _LEDGER.fold(spark, path, late_rows, backfill=True)
 
 
 def matview_stream_sink(spark: SparkSession, path: str):
@@ -335,12 +188,7 @@ def matview_stream_sink(spark: SparkSession, path: str):
     replayed epochs no-ops for TIME-ORDERED feeds (the
     rollup_stream_sink contract); compact on a schedule to keep the
     epoch chain short."""
-    matview_meta(path)  # fail fast if the view was never created
-
-    def sink(batch: DataFrame, epoch_id: int) -> None:
-        refresh_enrich_view(spark, path, batch)
-
-    return sink
+    return _LEDGER.sink(spark, path)
 
 
 def compact_enrich_view(spark: SparkSession, path: str) -> dict:
@@ -348,7 +196,7 @@ def compact_enrich_view(spark: SparkSession, path: str) -> dict:
     maintenance after many refreshes.  Staging + atomic swap, sidecar
     committed last (the rollup's crash discipline).
 
-    PARTITION-GRANULAR: each epoch's tree is re-read with hive
+    PARTITION-GRANULAR: each epoch's leafs are re-read with hive
     partition discovery (``part_ns`` comes back as the directory
     name), so rows land under the SAME ``part_ns`` they were written
     with — the time bucket is never re-derived from a time column.
@@ -356,54 +204,4 @@ def compact_enrich_view(spark: SparkSession, path: str) -> dict:
     omits ``time_col`` (ADVICE r8: re-deriving ``part_ns`` via
     ``_tns`` raised an unresolved-column AnalysisException on them,
     breaking the documented compact-on-a-schedule maintenance path)."""
-    meta = matview_meta(path)
-    schema = T.StructType.fromJson(meta["rows_schema"])
-    part_field = T.StructField("part_ns", T.LongType())
-    wide = T.StructType(list(schema.fields) + [part_field])
-    staging = os.path.join(path, "rows.compacting")
-    shutil.rmtree(staging, ignore_errors=True)
-    parts: list[int] = []
-    if meta["epochs"]:
-        rows = None
-        for e in meta["epochs"]:
-            if not e["parts"]:
-                continue
-            esch = T.StructType.fromJson(
-                e.get("schema") or meta["rows_schema"]
-            )
-            df = spark.read.schema(
-                T.StructType(list(esch.fields) + [part_field])
-            ).parquet(os.path.join(path, "rows", f"epoch={e['epoch']}"))
-            df = cast_to(df, wide)
-            rows = df if rows is None else rows.unionByName(df)
-        if rows is None:  # every listed epoch empty (defensive)
-            rows = spark.createDataFrame([], wide)
-        rows.write.mode("overwrite").partitionBy(
-            "part_ns"
-        ).parquet(os.path.join(staging, "epoch=0"))
-        parts = sorted(
-            int(d.split("=", 1)[1])
-            for d in os.listdir(os.path.join(staging, "epoch=0"))
-            if d.startswith("part_ns=")
-        )
-    # intent marker brackets only the rename window (the rollup /
-    # annindex crash discipline): readers refuse a mid-swap tree
-    meta["folding"] = True
-    _write_meta(path, meta)
-    old = os.path.join(path, "rows")
-    trash = os.path.join(path, "rows.old")
-    shutil.rmtree(trash, ignore_errors=True)
-    if os.path.isdir(old):
-        os.replace(old, trash)
-    if meta["epochs"]:
-        os.replace(staging, old)
-    meta.pop("folding", None)
-    meta["epochs"] = (
-        [{"epoch": 0, "watermark_ns": meta["watermark_ns"], "parts": parts,
-          "schema": meta["rows_schema"]}]
-        if parts
-        else []
-    )
-    _write_meta(path, meta)  # commit point
-    shutil.rmtree(trash, ignore_errors=True)
-    return {"epochs_folded": True, "parts": len(parts)}
+    return _LEDGER.compact(spark, path)

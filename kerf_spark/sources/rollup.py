@@ -28,15 +28,12 @@ Design (Spark-native LSM, the same base+delta+epoch discipline as
 * Refresh reads ``source WHERE ts >= watermark`` — a pushed-down range
   predicate, so with time-ordered appends (the tick contract) parquet
   row-group min/max skip everything but the new tail.  Late rows behind
-  the watermark are NOT picked up (document/backfill via
-  :func:`compact_rollup` + rebuild, or widen the source filter
-  yourself); this is the standard continuous-aggregate contract.
-* Crash safety: the epoch directory is written first (``overwrite`` —
-  a replayed refresh recomputes the same epoch deterministically and
-  overwrites it), the sidecar swaps in atomically LAST.  Readers only
-  trust epochs the sidecar lists, so a half-written epoch is invisible
-  and the replay is idempotent.  ``compact_rollup`` folds all epochs
-  into a fresh epoch-0 base through a staging dir + atomic swap.
+  the watermark are skipped by refresh and fold in through
+  :func:`backfill_rollup` (a Workspace-attached rollup routes an
+  append's stragglers there automatically).
+* Crash safety (sidecar swapped in LAST, replays overwrite their
+  epoch), width promotion and compaction are the epoch-ledger protocol
+  shared with the enrichment views (``sources.ledger``).
 
 Exactness: ``cnt``/``min``/``max``/``open``/``close`` and integer
 ``sum`` are associativity-immune — incremental refresh is bitwise equal
@@ -47,8 +44,6 @@ cents if you need bit-stable totals (the engine-wide discipline).
 
 from __future__ import annotations
 
-import json
-import os
 import shutil
 
 from pyspark.sql import DataFrame, SparkSession
@@ -56,7 +51,9 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..errors import ArgsError
-from ..functions.temporal import DAY, ts_to_ns, xbar
+from ..functions.temporal import DAY, xbar
+from . import ledger as L
+from .ledger import cast_to, promote_schema, promote_type  # noqa: F401
 
 _META = "rollup.json"
 #: bump when the on-disk layout or partial-aggregation expressions
@@ -69,36 +66,9 @@ _META = "rollup.json"
 FORMAT = 2
 
 
-# ----------------------------------------------------------------- sidecar
-def _write_meta(path: str, meta: dict) -> None:
-    tmp = os.path.join(path, _META + ".tmp")
-    with open(tmp, "w") as fh:
-        json.dump(meta, fh)
-    os.replace(tmp, os.path.join(path, _META))  # atomic swap
-
-
 def rollup_meta(path: str) -> dict:
     """The rollup sidecar (spec, watermark, epoch ledger)."""
-    with open(os.path.join(path, _META)) as fh:
-        meta = json.load(fh)
-    if meta.get("format") != FORMAT:
-        raise ArgsError(
-            f"rollup at {path} has format {meta.get('format')}, "
-            f"this code reads format {FORMAT} — rebuild it"
-        )
-    if meta.get("folding"):
-        # a compaction died inside its swap window: the bars tree may
-        # be mid-rename (missing leafs) — fail loud, rebuild (the
-        # annindex._check_not_folding discipline)
-        raise ArgsError(
-            f"rollup at {path} has an interrupted compaction — rebuild it"
-        )
-    return meta
-
-
-def _tns(meta: dict):
-    c = F.col(meta["time_col"])
-    return ts_to_ns(c) if meta["time_kind"] == "timestamp" else c.cast("long")
+    return _LEDGER.meta(path)
 
 
 # ---------------------------------------------------------------- partials
@@ -108,7 +78,7 @@ def _partials(df: DataFrame, meta: dict) -> DataFrame:
     so the merge step is a plain lexicographic min/max — ties on the
     timestamp break by value, deterministically on any layout."""
     keys, values = meta["keys"], meta["values"]
-    tns = _tns(meta)
+    tns = L._tns(meta)
     sel = df.select(
         *[F.col(k) for k in keys],
         xbar(tns, int(meta["width_ns"])).alias("bucket_ns"),
@@ -196,119 +166,39 @@ def _with_part(parts: DataFrame, meta: dict) -> DataFrame:
     )
 
 
-def _partials_schema(meta: dict) -> T.StructType:
-    return T.StructType.fromJson(meta["partials_schema"])
+def _derive(spark: SparkSession, path: str, rows: DataFrame, meta: dict):
+    return _with_part(_partials(rows, meta), meta)
 
 
-# ------------------------------------------------------ schema promotion
-def promote_type(a: T.DataType, b: T.DataType) -> T.DataType:
-    """Widest-wins promotion over the kerf numeric ladder, recursing
-    through structs/arrays — the reference's promote-on-append width
-    discipline (layout.cc:726-934) applied to DERIVED artifacts: a
-    source that widened between create and refresh (e.g. a Workspace
-    table whose minimal-width smallint outgrew into bigint) widens the
-    artifact's schema instead of corrupting its reads."""
-    if a == b:
-        return a
-    if isinstance(a, T.StructType) and isinstance(b, T.StructType):
-        if [f.name for f in a.fields] != [f.name for f in b.fields]:
-            raise ArgsError(
-                f"cannot promote structs with different fields: "
-                f"{a.simpleString()} vs {b.simpleString()}"
-            )
-        return T.StructType(
-            [
-                T.StructField(
-                    fa.name, promote_type(fa.dataType, fb.dataType), True
-                )
-                for fa, fb in zip(a.fields, b.fields)
-            ]
-        )
-    if isinstance(a, T.ArrayType) and isinstance(b, T.ArrayType):
-        return T.ArrayType(
-            promote_type(a.elementType, b.elementType), True
-        )
-    from .catalog import _promote
-
-    prom = _promote(a.simpleString(), b.simpleString())  # raises loudly
-    return _parse_simple(prom)
-
-
-_SIMPLE = {
-    "tinyint": T.ByteType(), "smallint": T.ShortType(),
-    "int": T.IntegerType(), "bigint": T.LongType(),
-    "float": T.FloatType(), "double": T.DoubleType(),
-    "string": T.StringType(),
-}
-
-
-def _parse_simple(s: str) -> T.DataType:
-    return _SIMPLE[s]
-
-
-def promote_schema(a: T.StructType, b: T.StructType) -> T.StructType:
-    if [f.name for f in a.fields] != [f.name for f in b.fields]:
-        raise ArgsError(
-            f"schema drift beyond width promotion: "
-            f"{[f.name for f in a.fields]} vs {[f.name for f in b.fields]}"
-        )
-    return T.StructType(
-        [
-            T.StructField(fa.name, promote_type(fa.dataType, fb.dataType), True)
-            for fa, fb in zip(a.fields, b.fields)
-        ]
+def _merge_touched(
+    spark: SparkSession, path: str, meta: dict, inc: DataFrame,
+    target: T.StructType, scratch: str,
+) -> DataFrame:
+    """The epoch's content: the MERGED state of every partition the
+    increment touches.  The increment's partials are staged once; the
+    touched-partition list is bounded by its time span (appends are a
+    tail), so only those partitions' prior state is read."""
+    inc.write.mode("overwrite").parquet(scratch)
+    inc_stored = spark.read.parquet(scratch)
+    touched = sorted(
+        r["part_ns"] for r in inc_stored.select("part_ns").distinct().collect()
     )
-
-
-def cast_to(df: DataFrame, schema: T.StructType) -> DataFrame:
-    """Align ``df``'s columns to ``schema`` (widening casts only, by
-    construction of :func:`promote_schema`)."""
-    if df.schema == schema:
-        return df
-    return df.select(
-        *[F.col(f.name).cast(f.dataType).alias(f.name) for f in schema.fields]
-    )
-
-
-def _resolution(meta: dict) -> dict[int, int]:
-    """part_ns -> epoch holding its current state (last writer wins)."""
-    res: dict[int, int] = {}
-    for e in meta["epochs"]:
-        for p in e["parts"]:
-            res[int(p)] = int(e["epoch"])
-    return res
-
-
-def _leaf(path: str, epoch: int, part: int) -> str:
-    return os.path.join(path, "bars", f"epoch={epoch}", f"part_ns={part}")
-
-
-def _read_leafs(
-    spark: SparkSession, path: str, meta: dict, pairs, target: T.StructType
-) -> DataFrame | None:
-    """Read ``[(epoch, part), ...]`` leaf dirs, each epoch with ITS
-    recorded schema (epochs written before a width promotion are
-    narrower than the current one), cast to ``target``, union.  The
-    promote-on-append discipline for derived artifacts: old epochs
-    never rewrite, reads widen."""
-    by_epoch: dict[int, list[int]] = {}
-    for e, pt in pairs:
-        by_epoch.setdefault(int(e), []).append(int(pt))
-    esch = {
-        int(en["epoch"]): en.get("schema") or meta["partials_schema"]
-        for en in meta["epochs"]
-    }
-    out = None
-    for e, ps in sorted(by_epoch.items()):
-        sch = T.StructType.fromJson(esch[e])
-        df = cast_to(
-            spark.read.schema(sch).parquet(
-                *[_leaf(path, e, pt) for pt in ps]
-            ),
-            target,
+    res = L._resolution(meta)
+    prior = [(res[p], p) for p in touched if p in res]
+    merged = cast_to(inc_stored.drop("part_ns"), target)
+    if prior:
+        merged = _merge(
+            merged.unionByName(_LEDGER.read(spark, path, meta, pairs=prior)),
+            meta,
         )
-        out = df if out is None else out.unionByName(df)
-    return out
+    return _with_part(cast_to(merged, target), meta)
+
+
+_LEDGER = L.Ledger(
+    kind="rollup", verb="rollup", sidecar=_META, tree="bars",
+    schema_key="partials_schema", format=FORMAT,
+    derive=_derive, merge=_merge_touched,
+)
 
 
 # ------------------------------------------------------------ create/read
@@ -356,24 +246,12 @@ def create_rollup(
         )
     if not keys and not values:
         raise ArgsError("need at least one key or value column")
-    dt = dict(zip(source.schema.names, source.schema.fields))
-    kind = (
-        "timestamp"
-        if isinstance(
-            dt[time_col].dataType, (T.TimestampType, T.TimestampNTZType)
-        )
-        else "ns"
-    )
-    # reset any previous rollup life FIRST (sidecar before trees), the
-    # build-hygiene discipline shared with annindex._clear_derived
-    if os.path.isdir(path):
-        shutil.rmtree(path)
-    os.makedirs(path, exist_ok=True)
+    L._reset(path)
     meta = {
         "format": FORMAT,
         "kind": "rollup",
         "time_col": time_col,
-        "time_kind": kind,
+        "time_kind": L._time_kind(source, time_col),
         "keys": list(keys),
         "values": list(values),
         "width_ns": int(width_ns),
@@ -391,57 +269,7 @@ def create_rollup(
         "watermark_ns": None,
         "epochs": [],
     }
-    stats = source.agg(
-        F.count(F.lit(1)).alias("n"), F.max(_tns(meta)).alias("mx")
-    ).head()
-    parts = _with_part(_partials(source, meta), meta)
-    meta["partials_schema"] = parts.drop("part_ns").schema.jsonValue()
-    if stats["n"] == 0:
-        # empty corpora are first-class: no epoch dir (empty partitioned
-        # writes leave schema-less trees), schema lives in the sidecar
-        meta["watermark_ns"] = 0
-        _write_meta(path, meta)
-        return meta
-    epoch_dir = os.path.join(path, "bars", "epoch=0")
-    parts.write.mode("overwrite").partitionBy("part_ns").parquet(epoch_dir)
-    touched = sorted(
-        int(d.split("=", 1)[1])
-        for d in os.listdir(epoch_dir)
-        if d.startswith("part_ns=")
-    )
-    meta["epochs"] = [{"epoch": 0, "watermark_ns": int(stats["mx"]) + 1,
-                       "parts": touched,
-                       "schema": meta["partials_schema"]}]
-    meta["watermark_ns"] = int(stats["mx"]) + 1
-    _write_meta(path, meta)
-    return meta
-
-
-def _increment(source: DataFrame, meta: dict) -> DataFrame:
-    """The refresh's tail scan: everything at/after the watermark.
-
-    The predicate is a plain range comparison on the time column (for
-    timestamp sources, on the reconstructed timestamp bound — not on a
-    derived expression), so it PUSHES DOWN to the parquet scan and
-    row-group min/max skip the already-folded history — the property
-    that makes a refresh cost O(increment), plan-asserted in tests."""
-    w = int(meta["watermark_ns"])
-    tc = meta["time_col"]
-    if meta["time_kind"] == "timestamp":
-        # compare the RAW column against a literal of ITS OWN type:
-        # parquet pushes attribute-vs-literal range predicates, while
-        # the old unix_micros(col)*1000 >= w form wrapped the column in
-        # a function and scanned everything.  Ceil-to-µs keeps the ns
-        # semantics exact (ts_ns is µs*1000 at this kind, so
-        # ts_ns >= w  <=>  ts_us >= ceil(w/1000)); the cast to the
-        # column's exact type (TIMESTAMP vs TIMESTAMP_NTZ) is on the
-        # LITERAL side and lossless under the engine's fixed UTC.
-        bound_us = -((-w) // 1000)
-        dt = source.schema[tc].dataType.simpleString()
-        return source.where(
-            F.col(tc) >= F.timestamp_micros(F.lit(int(bound_us))).cast(dt)
-        )
-    return source.where(F.col(tc).cast("long") >= F.lit(w))
+    return _LEDGER.create(path, meta, source)
 
 
 def refresh_rollup(spark: SparkSession, path: str, source: DataFrame) -> dict:
@@ -452,52 +280,7 @@ def refresh_rollup(spark: SparkSession, path: str, source: DataFrame) -> dict:
     rollup, not the rollup).  Replay-idempotent: the epoch number and
     its content are deterministic functions of (source, watermark), and
     the sidecar — the only thing readers trust — swaps in last."""
-    meta = rollup_meta(path)
-    if meta["watermark_ns"] is None:
-        raise ArgsError(f"rollup at {path} was never created")
-    w_old = int(meta["watermark_ns"])
-    inc = _increment(source, meta)
-    stats = inc.agg(
-        F.count(F.lit(1)).alias("n"), F.max(_tns(meta)).alias("mx")
-    ).head()
-    if stats["n"] == 0:
-        return {"rows": 0, "parts": [], "watermark_ns": w_old}
-    w_new = int(stats["mx"]) + 1
-    inc_parts = _with_part(_partials(inc, meta), meta)
-    # width promotion: a source that widened since create widens the
-    # artifact schema; old epochs stay narrow on disk and widen at read
-    target = promote_schema(
-        _partials_schema(meta), inc_parts.drop("part_ns").schema
-    )
-    meta["partials_schema"] = target.jsonValue()
-    inc_parts = _with_part(cast_to(inc_parts.drop("part_ns"), target), meta)
-    epoch = len(meta["epochs"])
-    epoch_dir = os.path.join(path, "bars", f"epoch={epoch}")
-    # stage the increment's partials once; the touched-partition list
-    # is bounded by the increment's time span (appends are a tail)
-    inc_parts.write.mode("overwrite").parquet(epoch_dir + ".inc")
-    inc_stored = spark.read.parquet(epoch_dir + ".inc")
-    touched = sorted(
-        r["part_ns"] for r in inc_stored.select("part_ns").distinct().collect()
-    )
-    res = _resolution(meta)
-    merged = cast_to(inc_stored.drop("part_ns"), target)
-    prior = _read_leafs(
-        spark, path, meta,
-        [(res[p], p) for p in touched if p in res], target,
-    )
-    if prior is not None:
-        merged = _merge(merged.unionByName(prior), meta)
-    merged = _with_part(cast_to(merged, target), meta)
-    merged.write.mode("overwrite").partitionBy("part_ns").parquet(epoch_dir)
-    shutil.rmtree(epoch_dir + ".inc", ignore_errors=True)
-    meta["epochs"].append(
-        {"epoch": epoch, "watermark_ns": w_new, "parts": touched,
-         "schema": target.jsonValue()}
-    )
-    meta["watermark_ns"] = w_new
-    _write_meta(path, meta)  # commit point
-    return {"rows": int(stats["n"]), "parts": touched, "watermark_ns": w_new}
+    return _LEDGER.fold(spark, path, source)
 
 
 def read_rollup(
@@ -516,17 +299,7 @@ def read_rollup(
     ``finalize=False`` returns raw partials (what :func:`_merge` eats —
     the mergeable form, e.g. for cross-rollup unions)."""
     meta = rollup_meta(path)
-    res = _resolution(meta)
-    pw = int(meta["part_width_ns"])
-    schema = _partials_schema(meta)
-    pairs = [
-        (e, p)
-        for p, e in sorted(res.items())
-        if (lo_ns is None or p + pw > lo_ns) and (hi_ns is None or p <= hi_ns)
-    ]
-    bars = _read_leafs(spark, path, meta, pairs, schema)
-    if bars is None:
-        bars = spark.createDataFrame([], schema)
+    bars = _LEDGER.read(spark, path, meta, lo_ns, hi_ns)
     if lo_ns is not None:
         bars = bars.where(F.col("bucket_ns") >= F.lit(int(lo_ns)))
     if hi_ns is not None:
@@ -643,52 +416,7 @@ def backfill_rollup(
     feed, e.g. ``dropDuplicatesWithinWatermark`` upstream).  Rows
     at/after the watermark are REFUSED (they belong to refresh; letting
     them in here would double-count them on the next refresh)."""
-    meta = rollup_meta(path)
-    if meta["watermark_ns"] is None:
-        raise ArgsError(f"rollup at {path} was never created")
-    w = int(meta["watermark_ns"])
-    tns = _tns(meta)
-    stats = late_rows.agg(
-        F.count(F.lit(1)).alias("n"), F.max(tns).alias("mx")
-    ).head()
-    if stats["n"] == 0:
-        return {"rows": 0, "parts": []}
-    if int(stats["mx"]) >= w:
-        raise ArgsError(
-            f"backfill_rollup got rows at/after the watermark ({w}) — "
-            f"those belong to refresh_rollup (folding them here would "
-            f"double-count them on the next refresh)"
-        )
-    inc_parts = _with_part(_partials(late_rows, meta), meta)
-    target = promote_schema(
-        _partials_schema(meta), inc_parts.drop("part_ns").schema
-    )
-    meta["partials_schema"] = target.jsonValue()
-    inc_parts = _with_part(cast_to(inc_parts.drop("part_ns"), target), meta)
-    epoch = len(meta["epochs"])
-    epoch_dir = os.path.join(path, "bars", f"epoch={epoch}")
-    inc_parts.write.mode("overwrite").parquet(epoch_dir + ".inc")
-    inc_stored = spark.read.parquet(epoch_dir + ".inc")
-    touched = sorted(
-        r["part_ns"] for r in inc_stored.select("part_ns").distinct().collect()
-    )
-    res = _resolution(meta)
-    merged = cast_to(inc_stored.drop("part_ns"), target)
-    prior = _read_leafs(
-        spark, path, meta,
-        [(res[p], p) for p in touched if p in res], target,
-    )
-    if prior is not None:
-        merged = _merge(merged.unionByName(prior), meta)
-    merged = _with_part(cast_to(merged, target), meta)
-    merged.write.mode("overwrite").partitionBy("part_ns").parquet(epoch_dir)
-    shutil.rmtree(epoch_dir + ".inc", ignore_errors=True)
-    meta["epochs"].append(
-        {"epoch": epoch, "watermark_ns": w, "parts": touched,
-         "backfill": True, "schema": target.jsonValue()}
-    )
-    _write_meta(path, meta)  # commit point (watermark unchanged)
-    return {"rows": int(stats["n"]), "parts": touched}
+    return _LEDGER.fold(spark, path, late_rows, backfill=True)
 
 
 def rollup_stream_sink(spark: SparkSession, path: str):
@@ -699,12 +427,7 @@ def rollup_stream_sink(spark: SparkSession, path: str):
     the watermark — the tick-append contract this module documents);
     each non-empty batch lands as one epoch in the ledger, so run
     :func:`compact_rollup` on a schedule to keep the chain short."""
-    rollup_meta(path)  # fail fast if the rollup was never created
-
-    def sink(batch: DataFrame, epoch_id: int) -> None:
-        refresh_rollup(spark, path, batch)
-
-    return sink
+    return _LEDGER.sink(spark, path)
 
 
 def drop_rollup_range(spark: SparkSession, path: str, before_ns: int) -> dict:
@@ -728,13 +451,14 @@ def drop_rollup_range(spark: SparkSession, path: str, before_ns: int) -> dict:
         for p in e["parts"]:
             if int(p) + pw <= cut:
                 dropped.append(int(p))
-                doomed.append(_leaf(path, int(e["epoch"]), int(p)))
+                doomed.append(_LEDGER.leaf(path, int(e["epoch"]), int(p)))
             else:
                 keep.append(p)
         e["parts"] = keep
     if not dropped:
         return {"parts_dropped": 0}
-    _write_meta(path, meta)  # commit point: readers stop seeing them
+    # commit point: readers stop seeing them
+    L._write_sidecar(path, _META, meta)
     for d in doomed:
         shutil.rmtree(d, ignore_errors=True)
     return {"parts_dropped": len(set(dropped))}
@@ -747,42 +471,4 @@ def compact_rollup(spark: SparkSession, path: str) -> dict:
     dedups partitions), rewrites it as epoch 0 through a staging dir,
     swaps atomically, drops the old chain.  Run it when the epoch
     ledger grows long (each refresh adds one)."""
-    meta = rollup_meta(path)
-    bars = _with_part(read_rollup(spark, path, finalize=False), meta)
-    staging = os.path.join(path, "bars.compacting")
-    shutil.rmtree(staging, ignore_errors=True)
-    n_parts = 0
-    if meta["epochs"]:
-        bars.write.mode("overwrite").partitionBy("part_ns").parquet(
-            os.path.join(staging, "epoch=0")
-        )
-        parts = sorted(
-            int(d.split("=", 1)[1])
-            for d in os.listdir(os.path.join(staging, "epoch=0"))
-            if d.startswith("part_ns=")
-        )
-        n_parts = len(parts)
-    else:
-        parts = []
-    # intent marker brackets ONLY the tight rename window: a crash
-    # inside it leaves the marker set and every reader refuses (the
-    # bars tree may be mid-swap) instead of answering from half a tree
-    meta["folding"] = True
-    _write_meta(path, meta)
-    old = os.path.join(path, "bars")
-    trash = os.path.join(path, "bars.old")
-    shutil.rmtree(trash, ignore_errors=True)
-    if os.path.isdir(old):
-        os.replace(old, trash)
-    if meta["epochs"]:
-        os.replace(staging, old)
-    meta.pop("folding", None)
-    meta["epochs"] = (
-        [{"epoch": 0, "watermark_ns": meta["watermark_ns"], "parts": parts,
-          "schema": meta["partials_schema"]}]
-        if parts
-        else []
-    )
-    _write_meta(path, meta)  # commit point
-    shutil.rmtree(trash, ignore_errors=True)
-    return {"epochs_folded": True, "parts": n_parts}
+    return _LEDGER.compact(spark, path)

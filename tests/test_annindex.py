@@ -16,6 +16,7 @@ from pyspark.sql import functions as F
 
 from kerf_spark.operators import annindex as AI
 from kerf_spark.operators import similarity as SIM
+from kerf_spark.sources.ledger import _write_sidecar
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -268,7 +269,7 @@ def test_interrupted_compaction_fails_loud_and_reads_stale(spark, emb, tmp_path)
     AI.build_ivf_index(emb, path, n_cells=8)
     meta = AI.index_meta(path)
     meta["folding"] = True
-    AI._write_meta(path, meta)
+    _write_sidecar(path, AI._META, meta)
     q = emb.where(F.col("vec_id") < 2)
     with pytest.raises(RuntimeError, match="interrupted compaction"):
         AI.ivf_topk_indexed(spark, path, q, k=3)
@@ -641,7 +642,7 @@ def test_huge_tombstone_set_plans_without_broadcast_hint(
     assert hinted(small)  # under the threshold: broadcast forced
     meta = AI.index_meta(path)
     meta["tombstones"] = AI.TOMB_BROADCAST_MAX + 1
-    AI._write_meta(path, meta)
+    _write_sidecar(path, AI._META, meta)
     big, live_big = AI._stored(spark, path, AI.index_meta(path))
     assert not hinted(big)  # over: unhinted, AQE chooses
     key = lambda df: sorted(r["vec_id"] for r in df.collect())

@@ -1,7 +1,8 @@
 """Incremental materialized enrichment views (sources.matview): the
 denormalize-at-ingest contract — incremental refresh == full rebuild,
-broadcast-join increments, storage-level range reads, crash-replay
-idempotence, epoch-chain compaction.
+broadcast-join increments, storage-level range reads, epoch-chain
+compaction.  Crash-replay idempotence is the epoch-ledger crash matrix
+in test_rollup.py.
 """
 
 import os
@@ -11,6 +12,7 @@ from pyspark.sql import functions as F
 
 from kerf_spark.errors import ArgsError
 from kerf_spark.functions.temporal import ts_to_ns
+from kerf_spark.sources import ledger as LG
 from kerf_spark.sources import matview as MV
 
 SF_DIR = "/root/testdata/sf0.001"
@@ -87,7 +89,7 @@ def test_refresh_joins_increment_against_broadcast_dim(
     _create(fact.limit(0), dim, path)
     meta = MV.matview_meta(path)
     dstored = spark.read.parquet(os.path.join(path, "dim"))
-    inc = MV._increment(fact, meta)
+    inc = LG._increment(fact, meta)
     plan = (
         MV._enrich(inc, dstored, meta)
         ._jdf.queryExecution().executedPlan().toString()
@@ -95,25 +97,6 @@ def test_refresh_joins_increment_against_broadcast_dim(
     assert "BroadcastHashJoin" in plan
     seg = plan[plan.index("PushedFilters"):][:250]
     assert "l_shipdate" in seg, seg
-
-
-def test_replay_overwrites_its_epoch(spark, fact, dim, tmp_path):
-    import json
-
-    path = str(tmp_path / "v")
-    split = int(
-        fact.select(ts_to_ns("l_shipdate").alias("t"))
-        .selectExpr("percentile(t, 0.5) p").head()["p"]
-    )
-    _create(fact.where(ts_to_ns("l_shipdate") < split), dim, path)
-    pre = MV.matview_meta(path)
-    MV.refresh_enrich_view(spark, path, fact)
-    want = _rows(spark, path)
-    # crash: epoch on disk, sidecar rolled back -> replay converges
-    with open(os.path.join(path, MV._META), "w") as fh:
-        json.dump(pre, fh)
-    MV.refresh_enrich_view(spark, path, fact)
-    assert _rows(spark, path) == want
 
 
 def test_range_read_and_compaction(spark, fact, dim, tmp_path):

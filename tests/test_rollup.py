@@ -12,6 +12,7 @@ from pyspark.sql import functions as F
 
 from kerf_spark.errors import ArgsError
 from kerf_spark.functions.temporal import DAY, HOUR, MINUTE, span_ns, ts_to_ns
+from kerf_spark.sources import ledger as LG
 from kerf_spark.sources import rollup as RU
 
 
@@ -84,32 +85,85 @@ def test_create_on_empty_then_refresh_everything(spark, tmp):
     assert _bars(spark, path).collect() == full
 
 
-def test_crash_replay_is_idempotent(spark, tmp):
-    """A refresh that died after writing its epoch dir but before the
-    sidecar swap must replay to the exact same state: the sidecar is
-    the only thing readers trust, and the replayed epoch overwrites."""
-    import json
+def _crash_case(spark, kind):
+    """``(source, time-ns column, create(df, path), read(path), meta,
+    refresh, backfill)`` for one epoch-ledger kind."""
+    from kerf_spark.sources import matview as MV
 
-    ev = _events(spark)
-    full = _full(spark, ev, tmp + "/full")
-    qs = ev.select(ts_to_ns("ts").alias("t")).selectExpr(
-        "percentile(t, 0.6) a"
-    ).head()
-    a = int(qs["a"])
-    path = tmp + "/inc"
-    RU.create_rollup(
-        ev.where(ts_to_ns("ts") < a), path, time_col="ts",
-        keys=["event_type"], values=["value"], width_ns=span_ns(5, "m"),
+    if kind == "rollup":
+        def create(df, path):
+            RU.create_rollup(
+                df, path, time_col="ts", keys=["event_type"],
+                values=["value"], width_ns=span_ns(5, "m"),
+            )
+
+        return (
+            _events(spark), ts_to_ns("ts"), create,
+            lambda path: _bars(spark, path).collect(),
+            RU.rollup_meta, RU.refresh_rollup, RU.backfill_rollup,
+        )
+    from conftest import SF_DIR
+
+    fact = spark.read.parquet(f"{SF_DIR}/lineitem.parquet").withColumnRenamed(
+        "l_partkey", "p_partkey"
     )
-    pre = RU.rollup_meta(path)
-    RU.refresh_rollup(spark, path, ev)
-    # simulate the crash: epoch=1 is on disk, sidecar says pre-refresh
-    with open(os.path.join(path, RU._META), "w") as fh:
-        json.dump(pre, fh)
-    # a reader between crash and replay sees the pre-refresh state
-    assert RU.rollup_meta(path)["watermark_ns"] == pre["watermark_ns"]
-    RU.refresh_rollup(spark, path, ev)  # the replay
-    assert _bars(spark, path).collect() == full
+    dim = spark.read.parquet(f"{SF_DIR}/part.parquet").select(
+        "p_partkey", "p_brand", "p_type"
+    )
+
+    def create(df, path):
+        MV.create_enrich_view(
+            df, dim, path, on=["p_partkey"], time_col="l_shipdate"
+        )
+
+    return (
+        fact, ts_to_ns("l_shipdate"), create,
+        lambda path: sorted(
+            tuple(r) for r in MV.read_enrich_view(spark, path).collect()
+        ),
+        MV.matview_meta, MV.refresh_enrich_view, MV.backfill_enrich_view,
+    )
+
+
+@pytest.mark.parametrize("op", ["refresh", "backfill"])
+@pytest.mark.parametrize("kind", ["rollup", "matview"])
+def test_crash_replay_is_idempotent(spark, tmp, monkeypatch, kind, op):
+    """A refresh or backfill that dies at its sidecar commit — epoch
+    dir on disk, sidecar not swapped — leaves readers on the old state,
+    and its replay converges to a clean run: the sidecar is the only
+    thing readers trust, and the replayed epoch overwrites its dir."""
+    src, t, create, read, meta, refresh, backfill = _crash_case(spark, kind)
+    create(src, tmp + "/full")
+    clean = read(tmp + "/full")
+    qs = src.select(t.alias("t")).selectExpr(
+        "percentile(t, 0.4) a", "percentile(t, 0.6) b"
+    ).head()
+    a, b = int(qs["a"]), int(qs["b"])
+    path = tmp + "/crash"
+    if op == "refresh":
+        create(src.where(t < b), path)
+        fold = lambda: refresh(spark, path, src)  # noqa: E731
+    else:  # withhold a slice from the MIDDLE of the range: late rows
+        late = (t >= a) & (t < b)
+        create(src.where(~late), path)
+        fold = lambda: backfill(spark, path, src.where(late))  # noqa: E731
+    pre, pre_rows = meta(path), read(path)
+
+    def boom(*args, **kwargs):
+        raise OSError("crash at the sidecar commit")
+
+    monkeypatch.setattr(LG, "_write_sidecar", boom)
+    with pytest.raises(OSError, match="sidecar commit"):
+        fold()
+    monkeypatch.undo()
+    epoch_dir = os.path.join(
+        path, "bars" if kind == "rollup" else "rows",
+        f"epoch={len(pre['epochs'])}",
+    )
+    assert os.path.isdir(epoch_dir)  # the crash left the epoch on disk
+    assert meta(path) == pre and read(path) == pre_rows
+    assert fold()["rows"] > 0  # the replay
+    assert read(path) == clean
 
 
 def test_untouched_partitions_are_not_rewritten(spark, tmp):
@@ -157,7 +211,7 @@ def test_range_read_opens_only_overlapping_partitions(spark, tmp):
     )
     all_files = set(RU.read_rollup(spark, tmp).inputFiles())
     days = sorted(
-        {p for p in RU._resolution(RU.rollup_meta(tmp))}
+        {p for p in LG._resolution(RU.rollup_meta(tmp))}
     )
     assert len(days) > 2
     lo = days[len(days) // 2]
@@ -509,7 +563,7 @@ def test_drop_rollup_range_retention(spark, tmp):
         ev, tmp, time_col="ts", keys=["event_type"], values=["value"],
         width_ns=span_ns(5, "m"),
     )
-    days = sorted(RU._resolution(RU.rollup_meta(tmp)))
+    days = sorted(LG._resolution(RU.rollup_meta(tmp)))
     assert len(days) > 2
     cut = days[2]  # drop the two oldest days
     res = RU.drop_rollup_range(spark, tmp, cut)
@@ -518,7 +572,7 @@ def test_drop_rollup_range_retention(spark, tmp):
     assert rows and min(r["bucket_ns"] for r in rows) >= cut
     # the dropped leaf dirs are gone from disk
     for p in days[:2]:
-        assert not os.path.exists(RU._leaf(tmp, 0, p))
+        assert not os.path.exists(RU._LEDGER.leaf(tmp, 0, p))
     # idempotent; refresh still a clean no-op
     assert RU.drop_rollup_range(spark, tmp, cut) == {"parts_dropped": 0}
     assert RU.refresh_rollup(spark, tmp, ev)["rows"] == 0
@@ -662,7 +716,7 @@ def test_refresh_tail_scan_predicate_is_pushed_down(spark, tmp):
         ev, tmp + "/t", time_col="ts", keys=["event_type"],
         values=["value"], width_ns=span_ns(5, "m"),
     )
-    inc = RU._increment(ev, RU.rollup_meta(tmp + "/t"))
+    inc = LG._increment(ev, RU.rollup_meta(tmp + "/t"))
     plan = inc._jdf.queryExecution().executedPlan().toString()
     seg = plan[plan.index("PushedFilters"):][:200]
     assert "GreaterThanOrEqual(ts" in seg, seg
@@ -676,7 +730,7 @@ def test_refresh_tail_scan_predicate_is_pushed_down(spark, tmp):
     # persist as parquet so there is a scan to push into
     evl.write.mode("overwrite").parquet(tmp + "/src")
     src = spark.read.parquet(tmp + "/src")
-    inc2 = RU._increment(src, RU.rollup_meta(p2))
+    inc2 = LG._increment(src, RU.rollup_meta(p2))
     plan2 = inc2._jdf.queryExecution().executedPlan().toString()
     seg2 = plan2[plan2.index("PushedFilters"):][:200]
     assert "GreaterThanOrEqual(ts" in seg2, seg2

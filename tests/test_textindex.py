@@ -18,6 +18,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from kerf_spark.operators import textindex as TI
+from kerf_spark.sources.ledger import _write_sidecar
 
 SF_DIR = "/root/testdata/sf0.001"
 TERMS = ["merge", "stream", "vector"]
@@ -190,7 +191,7 @@ def test_delete_crash_window_refuses_and_rebuilds(spark, docs, tmp_path):
     TI.build_text_index(docs, p, n_buckets=8)
     meta = TI.index_meta(p)
     meta["deleting"] = True
-    TI._write_meta(p, meta)
+    _write_sidecar(p, TI._META, meta)
     assert TI.is_stale(p, docs)
     with pytest.raises(RuntimeError, match="interrupted delete"):
         TI.bm25_topk(spark, p, TERMS, k=10)
@@ -347,7 +348,7 @@ def test_interrupted_compaction_fails_loud_and_reads_stale(spark, docs, tmp_path
     TI.build_text_index(docs, path)
     meta = TI.index_meta(path)
     meta["folding"] = True
-    TI._write_meta(path, meta)
+    _write_sidecar(path, TI._META, meta)
     with pytest.raises(RuntimeError, match="interrupted compaction"):
         TI.keyword_search(spark, path, TERMS)
     with pytest.raises(RuntimeError, match="interrupted compaction"):
@@ -792,7 +793,7 @@ def test_huge_text_tombstone_set_plans_without_broadcast_hint(
     assert hinted(small)
     meta = TI.index_meta(path)
     meta["tombstones"] = TI.TOMB_BROADCAST_MAX + 1
-    TI._write_meta(path, meta)
+    _write_sidecar(path, TI._META, meta)
     big = TI._index_table(spark, path, "doclens", TI.index_meta(path))
     assert not hinted(big)
     key = lambda df: sorted(r["doc_id"] for r in df.collect())

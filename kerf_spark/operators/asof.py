@@ -31,6 +31,20 @@ Tie semantics: right rows sort *before* left rows at equal timestamps
 visible to the trade — kerf's ``<=`` convention.  Among right rows with
 identical timestamps the last by ``tiebreak`` wins deterministically.
 
+Filters and the window: Spark pushes a filter through the window only
+on its partition keys, so a time filter applied to the joined result
+still sorts every row of both inputs.  Callers that know the filter
+apply it to the inputs first.  The kerf-SQL front end
+(``plans.kerfsql``, backward only) does: a WHERE conjunct that names no
+right column, is deterministic and holds no aggregate, window, verb,
+``fby`` or subquery filters the left input, because a left row's match
+depends only on its own ``by``/``on`` values and the right rows.  A literal upper bound on ``on`` (``on < X``, ``on <= X``,
+``on between ... and X``) also filters the right input to ``on <op> X
+or on is null`` when both ``on`` types are equal: no kept left row can
+match a later right row, and NULL-``on`` right rows sort first and can
+match.  A conjunct on a right column never moves, because it changes
+which right row is the latest.
+
 :func:`asof_join_merge` is the same plan under a keyed entry point.
 """
 
@@ -47,6 +61,13 @@ from ..functions.temporal import _divfloor
 _L = "__kf_is_left"
 _TB = "__kf_tiebreak"
 _RV = "__kf_right_val"  # struct(__on, carried right cols) — filled atomically
+_RVB = "__kf_rv_bwd"
+_RVF = "__kf_rv_fwd"
+
+
+def _q(name: str) -> str:
+    """``name`` as a backtick-quoted identifier for expression text."""
+    return "`" + name.replace("`", "``") + "`"
 
 
 def asof_join(
@@ -66,6 +87,18 @@ def asof_join(
     ``right.on >= left.on`` (ties: backward takes the *last* right row
     at equal ``on``/tiebreak order, forward the *first*).
 
+    ``direction="nearest"`` takes the right row with the smallest
+    |right.on - left.on|; ties (equidistant before/after, or an exact
+    equal-``on`` match) prefer the backward row, pandas-style.  Still
+    ONE union, ONE exchange, ONE sort: the backward fill (last over
+    unboundedPreceding..current) and the forward fill (first over
+    current..unboundedFollowing) are two frames over the SAME
+    partitioning and ordering, so Catalyst plans a single Exchange +
+    Sort feeding both Window frames (plan-asserted).  Equal-``on``
+    right rows sort before left rows and are therefore seen only by
+    the backward frame — harmless, because an equal match has distance
+    0 and backward wins ties anyway.
+
     Parameters
     ----------
     on : ordering column name, present in both frames (epoch-ns long or
@@ -77,7 +110,15 @@ def asof_join(
         nulled out (kerf window-limited asof).
     tiebreak : right column ordering ties at equal ``on`` (last wins);
         defaults to arbitrary-but-deterministic by all carried columns.
+
+    The plan is built as expression text, one ``selectExpr`` per
+    projection: a Column-API chain costs several py4j round trips per
+    column (about 2500 per call on a 19-column right side, against 64).
     """
+    if direction not in ("backward", "forward", "nearest"):
+        raise ArgsError(
+            f"direction must be backward/forward/nearest, got {direction!r}"
+        )
     by = [by] if isinstance(by, str) else list(by or [])
     if right_cols is None:
         right_cols = [c for c in right.columns if c not in by and c != on]
@@ -91,166 +132,88 @@ def asof_join(
     # partitioning does not — co-bucketed inputs would pay one hash
     # exchange.  An alias is unqualified on both sides: no exchange.
     keys = {c: f"__kf_by{i}" for i, c in enumerate(by)}
-    lnames = [keys.get(c, c) for c in left.columns]
     # the union widens a by/on column to both sides' common type (an
-    # int key against a double one would come back double): the result
-    # casts such a column back to left's type
-    ltypes, rtypes = left.dtypes, dict(right.dtypes)
-    lcols = [
-        (
-            F.col(keys.get(c, c)).cast(t)
-            if c in (*by, on) and rtypes.get(c, t) != t
-            else F.col(keys.get(c, c))
-        ).alias(c)
-        for c, t in ltypes
-    ]
-
+    # int key against a double one comes back double, and long -> double
+    # loses precision above 2^53): a left column whose type differs
+    # from right's crosses the union twice — its widened copy under the
+    # internal name orders and partitions the window, and the original
+    # travels under its own name to the result.  Equal types cross once.
+    ltypes, rtypes = dict(left.dtypes), dict(right.dtypes)
+    wide = {c for c in (*by, on) if rtypes.get(c) != ltypes.get(c)}
+    order = "__kf_on" if on in wide else on
+    lnames = [c if c in wide else keys.get(c, c) for c in left.columns]
     # the right payload travels as ONE nullable struct (timestamp +
     # carried columns), so the window fill picks a whole right ROW
     # atomically — filling each column independently with ignorenulls
     # would let a NULL in a carried column fall through to an older
     # (possibly tolerance-violating) row's value, diverging from the
-    # row semantics of merge_asof and of the SQL oracles
-    tb_src = (
-        F.col(tiebreak)
-        if tiebreak
-        else F.struct(*[F.col(c) for c in right_cols])
+    # row semantics of merge_asof and of the SQL oracles.  Each side
+    # lacks the other's columns; the union fills them with typed NULLs.
+    rv = ", ".join(
+        [f"CAST({_q(on)} AS BIGINT) AS `__on`"]
+        + [f"{_q(c)} AS {_q(out_names[c])}" for c in right_cols]
     )
-    rhs = right.select(
-        *[F.col(c).alias(keys[c]) if c in keys
-          else F.col(c) if c == on
-          else F.lit(None).cast(t).alias(c)
-          for c, t in ltypes],
-        F.lit(0).alias(_L),
-        F.struct(
-            F.col(on).cast("long").alias("__on"),
-            *[F.col(c).alias(out_names[c]) for c in right_cols],
-        ).alias(_RV),
-        tb_src.alias(_TB),
+    tb = _q(tiebreak) if tiebreak else (
+        f"struct({', '.join(_q(c) for c in right_cols)})"
     )
-    rv_type = rhs.schema[_RV].dataType
-    tb_type = rhs.schema[_TB].dataType
-    lhs = left.select(
-        *[F.col(c).alias(keys[c]) if c in keys else F.col(c)
-          for c in left.columns],
-        F.lit(1).alias(_L),
-        F.lit(None).cast(rv_type).alias(_RV),
-        F.lit(None).cast(tb_type).alias(_TB),
+    rhs = right.selectExpr(
+        *[f"{_q(c)} AS {_q(k)}" for c, k in keys.items()],
+        f"{_q(on)} AS {_q(order)}",
+        f"0 AS {_L}", f"struct({rv}) AS {_RV}", f"{tb} AS {_TB}",
     )
-    unioned = lhs.unionByName(rhs)
+    lhs = left.selectExpr(
+        *[f"{_q(c)} AS {_q(n)}" for c, n in zip(left.columns, lnames)],
+        *[f"{_q(c)} AS {_q(keys.get(c, order))}" for c in (*by, on)
+          if c in wide],
+        f"1 AS {_L}",
+    )
+    unioned = lhs.unionByName(rhs, allowMissingColumns=True)
 
-    if direction == "nearest":
-        return _asof_nearest(
-            unioned, lnames, on, list(keys.values()), right_cols, out_names,
-            tolerance_ns, lcols,
-        )
-    if direction not in ("backward", "forward"):
-        raise ArgsError(
-            f"direction must be backward/forward/nearest, got {direction!r}"
-        )
-    fwd = direction == "forward"
-    # forward: left rows sort before equal-ts right rows so the
+    # forward: left rows sort before equal-on right rows so the
     # (currentRow, following) frame still sees them; fill = first match
-    w = Window.partitionBy(*[F.col(k) for k in keys.values()]).orderBy(
-        F.col(on).asc(),
-        F.col(_L).desc() if fwd else F.col(_L).asc(),
-        F.col(_TB).asc(),
+    fwd = direction == "forward"
+    part = ", ".join(_q(k) for k in keys.values())
+    spec = (f"PARTITION BY {part} " if part else "") + (
+        f"ORDER BY {_q(order)} ASC, {_L} {'DESC' if fwd else 'ASC'}, {_TB} ASC"
     )
-    w = (
-        w.rowsBetween(Window.currentRow, Window.unboundedFollowing)
-        if fwd
-        else w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    last = (
+        f"last({_RV}, true) OVER ({spec} "
+        "ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)"
     )
-    fill = (
-        F.first(F.col(_RV), ignorenulls=True)
-        if fwd
-        else F.last(F.col(_RV), ignorenulls=True)
+    first = (
+        f"first({_RV}, true) OVER ({spec} "
+        "ROWS BETWEEN CURRENT ROW AND UNBOUNDED FOLLOWING)"
     )
-    filled = unioned.select(
-        *[F.col(c) for c in lnames],
-        F.col(_L),
-        fill.over(w).alias(_RV),
-    )
-
-    out = filled.where(F.col(_L) == 1)
-    rt = F.col(_RV)["__on"]
-    if tolerance_ns is not None:
-        if fwd:
-            stale = rt > (F.col(on).cast("long") + F.lit(tolerance_ns))
-        else:
-            stale = rt < (F.col(on).cast("long") - F.lit(tolerance_ns))
-        keep = F.col(_RV).isNotNull() & ~stale
+    on_l = f"CAST({_q(on)} AS BIGINT)"
+    if direction == "nearest":
+        fills = [f"{last} AS {_RVB}", f"{first} AS {_RVF}"]
+        rtb, rtf = f"{_RVB}.__on", f"{_RVF}.__on"
+        bdist, fdist = f"({on_l} - {rtb})", f"({rtf} - {on_l})"
+        use_b = f"({rtb} IS NOT NULL AND ({rtf} IS NULL OR {bdist} <= {fdist}))"
+        dist = f"CASE WHEN {use_b} THEN {bdist} ELSE {fdist} END"
+        keep = f"({dist}) IS NOT NULL"
+        if tolerance_ns is not None:
+            keep = f"{keep} AND ({dist}) <= {int(tolerance_ns)}"
+        chosen = f"CASE WHEN {use_b} THEN {_RVB} ELSE {_RVF} END"
     else:
-        keep = F.col(_RV).isNotNull()
-    return out.select(
-        *lcols,
+        fills = [f"{first if fwd else last} AS {_RV}"]
+        keep = f"{_RV} IS NOT NULL"
+        if tolerance_ns is not None:
+            stale = (
+                f"{_RV}.__on > ({on_l} + {int(tolerance_ns)})"
+                if fwd
+                else f"{_RV}.__on < ({on_l} - {int(tolerance_ns)})"
+            )
+            keep = f"{keep} AND NOT ({stale})"
+        chosen = _RV
+    filled = unioned.selectExpr(*map(_q, lnames), _L, *fills).where(
+        f"{_L} = 1"
+    )
+    return filled.selectExpr(
+        *[f"{_q(n)} AS {_q(c)}" for c, n in zip(left.columns, lnames)],
         *[
-            F.when(keep, F.col(_RV)[out_names[c]])
-            .otherwise(F.lit(None))
-            .alias(out_names[c])
-            for c in right_cols
-        ],
-    )
-
-
-_RVB = "__kf_rv_bwd"
-_RVF = "__kf_rv_fwd"
-
-
-def _asof_nearest(
-    unioned: DataFrame,
-    lnames: list,
-    on: str,
-    by: list,
-    right_cols: Sequence[str],
-    out_names: dict,
-    tolerance_ns: int | None,
-    lcols: list,
-) -> DataFrame:
-    """``direction="nearest"``: the right row with the smallest
-    |right.on - left.on|; ties (equidistant before/after, or an exact
-    equal-``on`` match) prefer the backward row, pandas-style.
-
-    ONE union, ONE exchange, ONE sort: the backward fill (last over
-    unboundedPreceding..current) and the forward fill (first over
-    current..unboundedFollowing) are two frames over the SAME
-    partitioning and ordering, so Catalyst plans a single Exchange +
-    Sort feeding both Window frames (plan-asserted).  Equal-``on``
-    right rows sort before left rows and are therefore seen only by
-    the backward frame — harmless, because an equal match has distance
-    0 and backward wins ties anyway.
-    """
-    w0 = Window.partitionBy(*[F.col(c) for c in by]).orderBy(
-        F.col(on).asc(), F.col(_L).asc(), F.col(_TB).asc()
-    )
-    wb = w0.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    wf = w0.rowsBetween(Window.currentRow, Window.unboundedFollowing)
-    filled = unioned.select(
-        *[F.col(c) for c in lnames],
-        F.col(_L),
-        F.last(F.col(_RV), ignorenulls=True).over(wb).alias(_RVB),
-        F.first(F.col(_RV), ignorenulls=True).over(wf).alias(_RVF),
-    ).where(F.col(_L) == 1)
-
-    on_l = F.col(on).cast("long")
-    rtb = F.col(_RVB)["__on"]
-    rtf = F.col(_RVF)["__on"]
-    bdist = on_l - rtb
-    fdist = rtf - on_l
-    use_b = rtb.isNotNull() & (rtf.isNull() | (bdist <= fdist))
-    dist = F.when(use_b, bdist).otherwise(fdist)
-    keep = (
-        dist.isNotNull()
-        if tolerance_ns is None
-        else dist.isNotNull() & (dist <= F.lit(tolerance_ns))
-    )
-    chosen = F.when(use_b, F.col(_RVB)).otherwise(F.col(_RVF))
-    return filled.select(
-        *lcols,
-        *[
-            F.when(keep, chosen[out_names[c]])
-            .otherwise(F.lit(None))
-            .alias(out_names[c])
+            f"CASE WHEN {keep} THEN ({chosen}).{_q(out_names[c])} "
+            f"ELSE NULL END AS {_q(out_names[c])}"
             for c in right_cols
         ],
     )

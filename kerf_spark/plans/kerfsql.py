@@ -24,6 +24,10 @@ Grammar (one statement, case-insensitive keywords):
     -- temporal key), resolved through operators.asof:
     --   select ... from trades asof join quotes on sym, ts
     --   select ... from t window join q on sym, ts within -1h 0s
+    -- the as-of join takes what its WHERE allows before the join
+    -- (_push_asof_where): left-only deterministic conjuncts filter the
+    -- left table, a literal upper bound on the time key also bounds
+    -- the right one; the full WHERE still applies to the joined rows
     update <table> set <col>=<expr>[, ...] [where <cond>]
     delete from <table> [where <cond>]
 
@@ -35,7 +39,9 @@ Expressions pass through verbatim to Spark SQL — kerf names like
 from __future__ import annotations
 
 import re
+from itertools import accumulate
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 
 from ..errors import ArgsError, LexError, ParseError, ParseIncompleteError, ParseUnmatchedError
@@ -768,6 +774,126 @@ def _route_workspace_write(spark, ws, q: str, head: str):
     return None
 
 
+_NO_PUSH = re.compile(
+    r"(?i)\b(?:select|over|fby)\b|\b(?:"
+    + "|".join(_ALL_VERBS)
+    + r")\s*\("
+)
+_CONST = (
+    r"[-+]?\d+(?:\.\d*)?(?:[eE][-+]?\d+)?[LlSsYyDd]?"
+    r"|(?:(?:timestamp|timestamp_ntz|timestamp_ltz|date)\s*)?'[^'\\]*'"
+)
+
+
+def _split_and(where: str) -> list[str]:
+    """The top-level AND conjuncts of ``where``.  An AND inside parens,
+    a string literal, a backtick-quoted name, a CASE ... END or a
+    BETWEEN's bounds stays in its conjunct."""
+    mask = re.sub(
+        r"`[^`]*`", lambda q: "`" + " " * (len(q.group()) - 2) + "`",
+        _mask_quoted(where),
+    )
+    parts, start, depth, case, between = [], 0, 0, 0, 0
+    for m in re.finditer(r"(?i)\b(?:between|and|case|end)\b|[()]", mask):
+        tok = m.group().lower()
+        if tok in ("(", ")"):
+            depth += 1 if tok == "(" else -1
+        elif depth:
+            continue
+        elif tok in ("case", "end"):
+            case += 1 if tok == "case" else -1
+        elif case:
+            continue
+        elif tok == "between":
+            between += 1
+        elif between:
+            between -= 1  # the AND of `x between lo and hi`
+        else:
+            parts.append(where[start:m.start()].strip())
+            start = m.end()
+    parts.append(where[start:].strip())
+    return parts
+
+
+def _upper_bound(conj: str, on: str) -> tuple[str, str] | None:
+    """``(op, X)`` when ``conj`` is ``on < X``, ``on <= X`` or ``on
+    between ... and X`` with a literal ``X``."""
+    c = conj.strip()
+    # drop parens that wrap the whole conjunct (not `(a) or (b)`)
+    while c[:1] == "(" and c[-1:] == ")" and 0 not in accumulate(
+        (ch == "(") - (ch == ")") for ch in _mask_quoted(c)[:-1]
+    ):
+        c = c[1:-1].strip()
+    name = rf"(?:`{re.escape(on)}`|{re.escape(on)})"
+    m = re.fullmatch(rf"(?is){name}\s*(<=|<)\s*({_CONST})", c)
+    if m:
+        return m.group(1), m.group(2)
+    m = re.fullmatch(rf"(?is){name}\s+between\s+.+?\s+and\s+({_CONST})", c)
+    return ("<=", m.group(1)) if m else None
+
+
+def _push_asof_where(
+    left: DataFrame, right: DataFrame, keys: list[str], where: str | None
+) -> tuple[DataFrame, DataFrame]:
+    """Filter the two sides of a kerf-SQL (backward) as-of join on
+    ``keys`` (equi keys, then the time key) with what the statement's
+    WHERE allows before the join.
+
+    * A top-level AND conjunct that names no right column, is
+      deterministic and holds no aggregate, window, kerf verb, ``fby``,
+      subquery or ``*`` filters the left table.  A left row's match
+      depends only on its own ``by``/``on`` values and the right rows,
+      so dropping other left rows changes no match.  A bare name always
+      means the left column: colliding right columns come out of the
+      join as ``<c>_r``.
+    * A pushed ``on < X``, ``on <= X`` or ``on between ... and X`` with
+      a literal ``X`` also filters the right table to ``on <op> X or on
+      is null`` when both ``on`` types are equal: no kept left row can
+      match a later right row.  NULL-``on`` right rows sort first and
+      can match, so they stay.
+    * A conjunct on a right column never moves: it changes which right
+      row is the latest.
+
+    The full WHERE still applies to the joined view; these filters
+    only add.  Right columns are told by name, not by trying the
+    conjunct on the left table: a failed resolution costs a logged
+    Spark error per statement."""
+    if not where or re.search(r"\"|--|/\*", _mask_quoted(where)):
+        return left, right
+    on, lcols = keys[-1], set(left.columns)
+    rnames = {
+        (c + "_r" if c in lcols else c).lower()
+        for c in right.columns
+        if c not in keys
+    }
+    bounds = []
+    for conj in _split_and(where):
+        mask = _mask_quoted(conj)
+        names = {
+            (a or b).lower()
+            for a, b in re.findall(r"`([^`]*)`|\b([A-Za-z_]\w*)", mask)
+        }
+        if (
+            not conj
+            or names & rnames
+            or _NO_PUSH.search(mask)
+            or re.search(r"[(,.]\s*\*", mask)  # a star names every column
+        ):
+            continue
+        try:
+            pushed = left.where(conj)
+        except AnalysisException:
+            continue  # not a row predicate: the full WHERE reports it
+        if pushed._jdf.queryExecution().analyzed().condition().deterministic():
+            left = pushed
+            bounds.append(_upper_bound(conj, on))
+    bounds = [b for b in bounds if b]
+    if bounds and dict(left.dtypes).get(on) == dict(right.dtypes).get(on):
+        for op, x in bounds:
+            right = right.where(f"`{on}` {op} {x} OR `{on}` IS NULL")
+    return left, right
+
+
 def kerf_sql(
     spark: SparkSession, q: str, workspace=None
 ) -> DataFrame:
@@ -918,9 +1044,14 @@ def kerf_sql(
         keys = [k.strip() for k in onlist.split(",") if k.strip()]
         if len(keys) < 1:
             raise ParseError("asof join needs at least an ordering column")
-        joined = asof_join(
-            spark.table(lt), spark.table(rt), on=keys[-1], by=keys[:-1]
+        rest = q[m.end():]
+        for kw in ("limit", "order\\s+by", "qualify", "having"):
+            rest = _split_clause(rest, kw)[0]
+        left, right = _push_asof_where(
+            spark.table(lt), spark.table(rt), keys,
+            _split_clause(rest, "where")[1],
         )
+        joined = asof_join(left, right, on=keys[-1], by=keys[:-1])
         return _resolve_via_view(joined, "asof", [lt, rt, *keys], m.span())
 
     m = re.search(

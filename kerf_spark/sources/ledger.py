@@ -16,6 +16,9 @@ means (partials and their merge, the dim snapshot and its join).
   never rewrite: reads widen them to the current schema.
 * Refresh folds the tail at/after the watermark and moves it; backfill
   folds late rows, refuses any at/after it and leaves it in place.
+  A row with a NULL time has no partition: create and backfill refuse
+  it before writing anything, and refresh drops it, because a NULL
+  time fails the watermark filter.
   Epochs SUPERSEDE per partition when the kind has a ``merge`` hook
   (rollups) and are disjoint row sets that union otherwise (views).
 
@@ -70,10 +73,24 @@ def _time_kind(df: DataFrame, time_col: str) -> str:
 
 
 def _stats(df: DataFrame, meta: dict):
-    """One job: row count ``n`` and max epoch-ns ``mx`` of ``df``."""
+    """One job: row count ``n``, non-NULL time count ``nt`` and max
+    epoch-ns ``mx`` of ``df``."""
+    t = _tns(meta)
     return df.agg(
-        F.count(F.lit(1)).alias("n"), F.max(_tns(meta)).alias("mx")
+        F.count(F.lit(1)).alias("n"), F.count(t).alias("nt"),
+        F.max(t).alias("mx"),
     ).head()
+
+
+def _null_times(stats, kind: str, meta: dict) -> ArgsError:
+    """The refusal of rows with a NULL time: such a row has no
+    ``part_ns``, and Spark would write it under
+    ``part_ns=__HIVE_DEFAULT_PARTITION__``, outside the ledger."""
+    return ArgsError(
+        f"{kind} source has {stats['n'] - stats['nt']} rows with a NULL "
+        f"{meta['time_col']!r} — a row with no time has no partition; "
+        f"filter or fill them first"
+    )
 
 
 def _increment(source: DataFrame, meta: dict) -> DataFrame:
@@ -236,6 +253,9 @@ class Ledger:
         """Epoch 0 over ``source``'s current contents.  The caller reset
         ``path`` (:func:`_reset`) and filled ``meta`` with the spec."""
         stats = _stats(source, meta)
+        if stats["nt"] < stats["n"]:
+            _reset(path)  # the caller's staging (a view's dim) goes too
+            raise _null_times(stats, self.kind, meta)
         frame = self.derive(source.sparkSession, path, source, meta)
         meta[self.schema_key] = frame.drop("part_ns").schema.jsonValue()
         if stats["n"] == 0:
@@ -261,7 +281,9 @@ class Ledger:
         w = int(meta["watermark_ns"])
         if not backfill:
             rows = _increment(rows, meta)
-        stats = _stats(rows, meta)
+        stats = _stats(rows, meta)  # refresh: NULL times fail _increment
+        if backfill and stats["nt"] < stats["n"]:
+            raise _null_times(stats, self.kind, meta)
         if stats["n"] == 0:
             return {"rows": 0, "parts": []} if backfill else {
                 "rows": 0, "parts": [], "watermark_ns": w,

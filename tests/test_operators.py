@@ -588,6 +588,27 @@ def test_asof_merge_mixed_key_types_match(
         assert dict(got.dtypes)["k"] == dict(want.dtypes)["k"] == ltype
 
 
+def test_asof_keeps_left_values_the_union_widens(spark):
+    """A left ``by``/``on`` column whose type differs from right's is
+    widened by the union (long -> double, lossy above 2^53); the result
+    still carries the left rows' own values, bit for bit, in all three
+    directions."""
+    from kerf_spark.operators.asof import asof_join
+
+    k, t0 = 2**62 + 1, 1704187800000000000
+    left = spark.createDataFrame(
+        [(k, t0 + 1, 1), (k, t0 + 3, 2)], "k long, ts long, id long"
+    )
+    right = spark.createDataFrame(
+        [(float(2**62), float(t0 - 10**11), 9.5)], "k double, ts double, px double"
+    )
+    for direction, px in (("backward", 9.5), ("forward", None), ("nearest", 9.5)):
+        res = asof_join(left, right, on="ts", by="k", direction=direction)
+        assert dict(res.dtypes)["k"] == dict(res.dtypes)["ts"] == "bigint"
+        got = sorted(tuple(r) for r in res.select("id", "k", "ts", "px").collect())
+        assert got == [(1, k, t0 + 1, px), (2, k, t0 + 3, px)], direction
+
+
 def test_asof_property_vs_pandas_oracle(spark):
     """Randomized check against pandas.merge_asof as brute-force oracle."""
     import random

@@ -166,6 +166,32 @@ def test_crash_replay_is_idempotent(spark, tmp, monkeypatch, kind, op):
     assert read(path) == clean
 
 
+@pytest.mark.parametrize("kind", ["rollup", "matview"])
+def test_null_times_are_refused_before_any_write(spark, tmp, kind):
+    """A NULL time has no partition: create refuses it with an
+    ArgsError and leaves no tree and no sidecar; backfill refuses it
+    and leaves the ledger and the trees as they were."""
+    src, t, create, read, meta, refresh, backfill = _crash_case(spark, kind)
+    tc = {"rollup": "ts", "matview": "l_shipdate"}[kind]
+    tree = {"rollup": "bars", "matview": "rows"}[kind]
+    nulled = src.withColumn(
+        tc, F.when(F.abs(F.hash(*src.columns)) % 10 == 0, None).otherwise(F.col(tc))
+    )
+    path = tmp + "/create"
+    with pytest.raises(ArgsError, match="NULL"):
+        create(nulled, path)
+    assert os.listdir(path) == []
+
+    a = int(src.select(t.alias("t")).selectExpr("percentile(t, 0.5) a").head()["a"])
+    path = tmp + "/backfill"
+    create(src.where(t >= a), path)
+    pre, pre_rows = meta(path), read(path)
+    with pytest.raises(ArgsError, match="NULL"):
+        backfill(spark, path, nulled.where(t.isNull() | (t < a)))
+    assert meta(path) == pre and read(path) == pre_rows
+    assert os.listdir(os.path.join(path, tree)) == ["epoch=0"]
+
+
 def test_untouched_partitions_are_not_rewritten(spark, tmp):
     """The incremental story: a refresh rewrites only the partitions
     its increment touches — early days' files are byte-identical

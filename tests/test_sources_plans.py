@@ -709,6 +709,124 @@ def test_kerfsql_asof_join_routes_through_asof_operator(spark):
     assert got[("A", 205)] == 3.0 and got[("A", 50)] is None
 
 
+@pytest.fixture(scope="module")
+def pushdown_views(spark, tmp_path_factory):
+    """Parquet-backed views (so filters stay plan nodes, not folded into
+    local rows): right ties at equal ``ts``, NULL ``ts`` and NULL ``sym``
+    on both sides, and a right ``px`` that collides with the left's."""
+    root = tmp_path_factory.mktemp("asof_push")
+    sides = {
+        "pd_trades": (
+            [("A", 100, 1.0, 1), ("A", 150, 1.5, 2), ("A", 200, 2.0, 3),
+             ("A", 250, 2.5, 4), ("A", 300, 3.0, 5), ("A", None, 9.0, 6),
+             ("B", 120, 1.2, 7), ("B", 260, 2.6, 8), (None, 200, 0.5, 9)],
+            "sym string, ts long, px double, id long",
+        ),
+        "pd_quotes": (
+            [("A", None, 0.1, 1, 0.5), ("A", 140, 1.4, 2, 1.0),
+             ("A", 200, 2.0, 3, 2.0), ("A", 200, 2.1, 4, 2.5),
+             ("A", 260, 2.6, 5, 3.0), ("A", 310, 3.1, 6, 3.5),
+             ("B", 90, 0.9, 7, 1.1), ("B", 255, 2.55, 8, 2.2),
+             ("B", 400, 4.0, 9, 4.4), (None, 100, 0.0, 10, 0.0)],
+            "sym string, ts long, px double, qseq long, bid double",
+        ),
+    }
+    for name, (rows, schema) in sides.items():
+        path = str(root / name)
+        spark.createDataFrame(rows, schema).write.parquet(path)
+        spark.read.parquet(path).createOrReplaceTempView(name)
+    return spark.table("pd_trades"), spark.table("pd_quotes")
+
+
+def _branch_comparisons(df):
+    """The comparisons in the filters under each child of ``df``'s
+    union (left, right), read from the JVM's optimized logical plan as
+    (expression class, column, literal) triples."""
+    def kids(n):
+        c = n.children()
+        return [c.apply(i) for i in range(c.size())]
+
+    def kind(n):
+        return n.getClass().getSimpleName()
+
+    def walk(n, pick):
+        return ([n] if pick(n) else []) + [
+            m for k in kids(n) for m in walk(k, pick)
+        ]
+
+    def comparisons(e):
+        k = kind(e)
+        if k in ("LessThan", "LessThanOrEqual", "GreaterThan",
+                 "GreaterThanOrEqual", "EqualTo", "IsNull", "Rand"):
+            a = kids(e)
+            col = a[0].name() if a and kind(a[0]) == "AttributeReference" else None
+            val = str(a[1].value()) if len(a) > 1 and kind(a[1]) == "Literal" else None
+            return {(k, col, val)}
+        return {t for c in kids(e) for t in comparisons(c)}
+
+    union, = walk(df._jdf.queryExecution().optimizedPlan(), lambda n: kind(n) == "Union")
+    return [
+        {t for f in walk(side, lambda n: kind(n) == "Filter")
+         for t in comparisons(f.condition())}
+        for side in kids(union)
+    ]
+
+
+_LT300, _NULL = ("LessThan", "ts", "300"), ("IsNull", "ts", None)
+
+
+@pytest.mark.parametrize(
+    "where, left_has, right_ts",
+    [
+        # time window: both bounds on the left, only the upper on the right
+        ("ts >= 100 and ts < 300",
+         {("GreaterThanOrEqual", "ts", "100"), _LT300}, {_LT300, _NULL}),
+        ("ts between 100 and 250",
+         {("GreaterThanOrEqual", "ts", "100"), ("LessThanOrEqual", "ts", "250")},
+         {("LessThanOrEqual", "ts", "250"), _NULL}),
+        # a right-column conjunct (the collided px comes out as px_r) stays
+        ("ts < 300 and px_r > 1.5 and qseq >= 3", {_LT300}, {_LT300, _NULL}),
+        # an OR with a right column moves nowhere
+        ("(ts < 250 or bid > 2.0)", set(), set()),
+        # a left-only OR filters the left but bounds no right row
+        ("(ts < 150 or ts > 300)",
+         {("LessThan", "ts", "150"), ("GreaterThan", "ts", "300")}, set()),
+        # a nondeterministic conjunct stays above the join
+        ("rand() < 2 and ts < 300", {_LT300}, {_LT300, _NULL}),
+        # a by-key conjunct, as in folio_asof_cosharded
+        ("sym = 'A' and ts >= 150", {("EqualTo", "sym", "A"),
+                                      ("GreaterThanOrEqual", "ts", "150")}, set()),
+    ],
+)
+def test_kerfsql_asof_pushes_left_where_below_the_join(
+    spark, pushdown_views, capfd, where, left_has, right_ts
+):
+    """The kerf-SQL as-of pushes left-only WHERE conjuncts onto the left
+    table and a literal upper time bound onto the right one; the result
+    equals the unpushed reference (the join over the full tables, then
+    the filter).  Telling the conjuncts apart raises (and logs) no Spark
+    error."""
+    from kerf_spark.operators.asof import asof_join
+    from kerf_spark.plans.kerfsql import kerf_sql
+
+    capfd.readouterr()
+    got = kerf_sql(
+        spark, f"select * from pd_trades asof join pd_quotes on sym, ts where {where}"
+    )
+    assert "QueryContextLogger" not in capfd.readouterr().err
+    want = asof_join(*pushdown_views, on="ts", by="sym").where(where)
+    assert got.columns == want.columns
+    key = lambda r: tuple((v is None, v) for v in r)  # noqa: E731
+    assert sorted(got.collect(), key=key) == sorted(want.collect(), key=key)
+    assert got.count() > 0
+    left, right = _branch_comparisons(got)
+    assert left_has <= left
+    assert not any(t[0] == "Rand" for t in left)
+    if not left_has:
+        assert not any(t[1] == "ts" for t in left)
+    assert {t for t in right if t[1] == "ts"} == right_ts
+
+
 def test_kerfsql_running_and_moving_verbs_translate():
     from kerf_spark.plans.kerfsql import translate
 
